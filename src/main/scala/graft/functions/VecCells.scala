@@ -196,7 +196,9 @@ case class VecTopCells(first: Expression, second: Expression,
   @transient private lazy val (cellIds, mat) = VecCells.decode(second, third)
   @transient private lazy val p: Int = {
     require(fourth.foldable, "vec_top_cells: p must be a literal")
-    fourth.eval(null).asInstanceOf[Number].intValue()
+    val v = fourth.eval(null).asInstanceOf[Number].intValue()
+    require(v >= 0, s"vec_top_cells: p must be >= 0, got $v")
+    v
   }
   @transient private lazy val vecCode: Int = first.dataType match {
     case ArrayType(DoubleType, _) => VecDot.ElemDouble

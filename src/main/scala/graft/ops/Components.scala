@@ -52,6 +52,7 @@ object Components {
         .localCheckpoint(true)
       val changed = next.join(labels.withColumnRenamed("component", "old"), "id")
         .filter(col("component") < col("old")).count()
+      releaseCheckpoint(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -102,6 +103,16 @@ object Components {
     e.unpersist()
     depths
   }
+
+  /** Drops the blocks behind a frame's local checkpoints. They are
+    * registered as persisted RDDs, not in the cache manager, so
+    * `Dataset.unpersist()` does not reach them; a superseded iterate holds
+    * them until the JVM collects it. Only for frames no longer read: the
+    * checkpoint IS the data, there is no lineage to recompute it from. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed
+      .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** Dedup clusters from a near-dup pair table: every doc mapped to its
     * cluster representative (min id), cluster sizes attached. */

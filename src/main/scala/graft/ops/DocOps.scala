@@ -222,18 +222,23 @@ object DocOps {
 
   /** d7 over any frame carrying (doc_id, toks) — the funnel feeds the
     * shared (persisted) curation frame, so its tokenization is the cached
-    * one instead of a fresh corpus scan. */
-  private[graft] def minhashLshPairsOf(toksDf: DataFrame, threshold: Double = 0.18,
-                                       dfCap: Int = 50): DataFrame = {
+    * one instead of a fresh corpus scan. Every frame persisted here is
+    * appended to `persisted`: the result is lazy and reads them, so the
+    * caller unpersists them once the result has been materialized. */
+  private[graft] def minhashLshPairsOf(
+      toksDf: DataFrame, threshold: Double = 0.18, dfCap: Int = 50,
+      persisted: scala.collection.mutable.Buffer[DataFrame] =
+        scala.collection.mutable.Buffer.empty): DataFrame = {
     val k = 12
     val rowsPerBand = 3
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val grams0 = shinglesOf(toksDf).persist(disk)
+    def held(df: DataFrame): DataFrame = { persisted += df; df }
+    val grams0 = held(shinglesOf(toksDf).persist(disk))
     // stop set persisted: TWO anti-join consumers now (the band side and
     // the candidate-restricted verify side); tiny by Zipf construction
-    val stop = grams0.groupBy("g").agg(count(lit(1)).as("df"))
+    val stop = held(grams0.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") > dfCap).select("g")
-      .persist()
+      .persist())
     val nStop = stop.count()
     if (nStop > 0)
       System.err.println(
@@ -243,18 +248,18 @@ object DocOps {
     // through an InMemoryRelation's columnar->row boundary (measured r4)
     val grams = grams0.join(broadcast(stop), Seq("g"), "left_anti")
       .select("doc_id", "g")
-    val bands = kmMinhashBands(grams, k, rowsPerBand)
+    val bands = held(kmMinhashBands(grams, k, rowsPerBand)
       // persisted: the band self-join below consumes bands TWICE — without
       // this the whole tokenize→md5→minhash pipeline executes once per
       // side (measured 2x the md5 work at sf0.1). Tiny: 4 rows per doc.
-      .persist(disk)
+      .persist(disk))
     // persisted: candidates feed BOTH the candidate-doc restriction and the
     // final verification join
-    val candidates = bands.toDF("doc_a", "bkey")
+    val candidates = held(bands.toDF("doc_a", "bkey")
       .join(bands.toDF("doc_b", "bkey"), Seq("bkey"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-      .persist(disk)
+      .persist(disk))
     // verify candidates with true Jaccard — computed ONLY over docs that
     // appear in the candidate set, and restricted BEFORE tokenization: the
     // doc_id semi-join cannot be pushed below the shingle explode by the
@@ -265,12 +270,12 @@ object DocOps {
     val candDocs = candidates.select(col("doc_a").as("doc_id"))
       .unionByName(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
-    val candGrams = shinglesOf(toksDf.join(candDocs, Seq("doc_id"), "left_semi"))
+    val candGrams = held(shinglesOf(toksDf.join(candDocs, Seq("doc_id"), "left_semi"))
       .join(broadcast(stop), Seq("g"), "left_anti")
       .select("doc_id", "g")
-      .persist(disk)
+      .persist(disk))
     // persisted like d6's: the n_a/n_b branches never share one exchange
-    val sizes = candGrams.groupBy("doc_id").agg(count(lit(1)).as("n")).persist()
+    val sizes = held(candGrams.groupBy("doc_id").agg(count(lit(1)).as("n")).persist())
     val inter = candGrams.toDF("doc_a", "g")
       .join(candGrams.toDF("doc_b", "g"), Seq("g"))
       .filter(col("doc_a") < col("doc_b"))

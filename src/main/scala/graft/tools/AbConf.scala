@@ -22,7 +22,9 @@ object AbConf {
     val spark = Sessions.local(cpus, shufflePartitions = cpus, appName = "graft-abconf")
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val fn = SparkEntry.queries(name)
-    val baseline = overrides.map { case (k, _) => k -> spark.conf.get(k) }
+    // a key with no session value and no string default is UNSET on the A
+    // arm (spark.conf.get would throw for it)
+    val baseline = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
     def once(): Double = {
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
@@ -33,7 +35,10 @@ object AbConf {
     val as = scala.collection.mutable.ArrayBuffer.empty[Double]
     val bs = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to pairs).foreach { i =>
-      baseline.foreach { case (k, v) => spark.conf.set(k, v) }
+      baseline.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
       as += once()
       overrides.foreach { case (k, v) => spark.conf.set(k, v) }
       bs += once()

@@ -111,9 +111,10 @@ object CurateCli {
     // The shingle rows both d7 and d13 consume come off the shared frame's
     // cached toks (a projection, not a scan). The cluster frame is
     // persisted: the near-dup gate consumes it here and the TERMINAL d26
-    // split keys its holdout by the same representatives.
+    // split keys its holdout by the same representatives. d7's internal
+    // persists join the stage frames, released with them after the run.
     val clusters = Components
-      .dupClusters(spark, DocOps.minhashLshPairsOf(corpus))
+      .dupClusters(spark, DocOps.minhashLshPairsOf(corpus, persisted = stageFrames))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     stageFrames += clusters
     val nearDupLosers = clusters
@@ -196,6 +197,9 @@ object CurateCli {
 
     corpus.unpersist()
     stageFrames.foreach(_.unpersist())
+    // the cluster labels' local checkpoint sits under the (now released)
+    // cluster cache and outside the cache manager
+    Components.releaseCheckpoint(clusters)
 
     import spark.implicits._
     funnel.toSeq.zipWithIndex

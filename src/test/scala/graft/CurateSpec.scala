@@ -9,7 +9,16 @@ class CurateSpec extends SparkSpec {
 
   test("curation funnel is monotone decreasing and deterministic") {
     val out1 = java.nio.file.Files.createTempDirectory("graft-curate1").toString
+    // the session is shared with earlier suites: start from an empty cache
+    // and count only the RDDs registered during the run, so the checks
+    // below see what the funnel leaves and nothing else
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val f1 = CurateCli.run(spark, dir, out1)
+    assert(spark.sharedState.cacheManager.isEmpty, "the funnel left cached frames")
+    val leftRdds = spark.sparkContext.getPersistentRDDs -- rddsBefore
+    assert(leftRdds.isEmpty, s"the funnel left persisted RDDs registered: " +
+      leftRdds.values.map(r => s"${r.id}:${r.getClass.getSimpleName}").mkString(", "))
     val stages = f1.map(_._1)
     assert(stages === Seq("input", "priority_dedup", "exact_dedup", "near_dedup",
       "decontaminate", "quality_gate", "lang_gate", "classifier_gate",

@@ -550,6 +550,19 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("vec_top_cells rejects a negative p with a readable message") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val top = Seq(Seq(1.0, 0.0)).toDF("v").select(
+      graft.functions.GraftFunctions.vec_top_cells(col("v"), typedlit(Seq(0, 1)),
+        typedlit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))), lit(-1)).as("cells"))
+    val e = intercept[Exception](top.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => Option(t.getMessage).exists(_.contains("p must be >= 0, got -1"))),
+      s"expected the p >= 0 requirement, got: ${chain.map(_.toString).mkString(" <- ")}")
+    assert(!chain.exists(_.isInstanceOf[NegativeArraySizeException]))
+  }
+
   test("bounded_min_set == slice(sort_array(collect_set)) with O(cap) state") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
