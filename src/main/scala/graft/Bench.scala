@@ -51,9 +51,7 @@ object Bench {
     * measures nothing). Returns texts/sec. Establishes the HARDWARE
     * ceiling of a core span (this sandbox's vCPUs are SMT/host-capped, so
     * even an embarrassingly parallel loop cannot scale 4x on every span). */
-  /** Shared with tools.PairBench so ad-hoc scaling pairs are bracketed by
-    * the SAME measurement the official artifact's floor is calibrated in. */
-  private[graft] def rawCpuProbe(threads: Int, texts: Array[String], minSec: Double = 1.2): Double = {
+  private def rawCpuProbe(threads: Int, texts: Array[String], minSec: Double = 1.2): Double = {
     val ac = KgPipeline.sharedAutomaton
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val counts = new java.util.concurrent.atomic.AtomicLong()
@@ -98,7 +96,7 @@ object Bench {
     * clean-phase 2.8-2.9M — and the artifact published clean-looking
     * 1.5-2.2x-inflated times. The reference is max(calibrated clean-phase
     * rate, best reading seen THIS run): the env default is this host's
-    * measured clean rate (tools.CpuScale / gated416.sh's gate), and any
+    * measured clean rate (a no-Spark tag loop at 8 threads), and any
     * in-run reading above it raises the bar. A probe below FLOOR_FRAC of
     * the reference marks the window degraded — absolute times from it are
     * not publishable as clean (ratios from a UNIFORMLY degraded pair are
@@ -107,8 +105,8 @@ object Bench {
   private val cleanRefDefault = 2.8e6
   private val FloorFrac = 0.65
 
-  /** The standard probe corpus (shared with tools.PairBench). */
-  private[graft] def defaultProbeTexts: Array[String] = (0L until 20000L)
+  /** The standard probe corpus. */
+  private def defaultProbeTexts: Array[String] = (0L until 20000L)
     .flatMap(i => TranscriptGen.turnsFor(i, 42L, 6, 1, verbosity = 6).map(_.text))
     .take(60000).toArray
   private var bestProbeSeen = 0.0
@@ -133,9 +131,7 @@ object Bench {
         // direct tagging: the bench corpus is ~90% unique texts, so the
         // zero-shuffle path is the per-corpus-correct strategy choice
         val r = new KgPipeline(spark, PipelineConfig(
-          persistIntermediates = true, dedupeTexts = false,
-          sharing = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARING", "auto")
-        )).run(turns)
+          persistIntermediates = true, dedupeTexts = false)).run(turns)
         // ONE action over the unioned triple families: all branches share
         // the persisted envo-row projection within a single job
         r.allTriples.count()
@@ -155,7 +151,7 @@ object Bench {
 
     // Scaling-evidence span: this sandbox's "32 vCPUs" deliver only ~2x
     // raw-thread throughput from 8->32 (SMT + ~14% VARIABLE host steal —
-    // measured with tools.CpuScale on a no-Spark tag loop), so wide spans
+    // measured on a no-Spark tag loop), so wide spans
     // cannot evidence near-linear scaling for ANY engine. Which narrow
     // span (2->8 or 4->16) the ENGINE scales best on changes with host
     // load and is not predicted by a bare thread loop (cache-friendly

@@ -217,6 +217,5 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         require(exprs.length == 4, s"vec_top_cells takes 4 arguments, got ${exprs.length}")
         VecTopCells(exprs(0), exprs(1), exprs(2), exprs(3))
       }))
-    e.injectOptimizerRule(_ => AutoDistinctTag)
   }
 }

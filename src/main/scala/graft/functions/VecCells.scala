@@ -39,6 +39,15 @@ import org.apache.spark.sql.types._
  *    real score (array_sort ascending puts null fields first), ties by
  *    cell descending; fewer than p cells returns them all;
  *  - NULL vec -> NULL result (null-intolerant).
+ *
+ * Two deliberate departures from the old array shapes (OpsSpec pins each
+ * against the old shape on adversarial rows):
+ *  - a NULL vec yields a NULL cell / NULL array, where the old shape
+ *    scored every cell NULL and returned the max cell (all-null order);
+ *  - a NaN score (a NaN element, or ±Inf times a zero matrix entry, or
+ *    +Inf + -Inf in the fold) orders like a NULL score, after every real
+ *    score, where Spark's ordering puts NaN above every double. ±Inf
+ *    scores order normally.
  */
 private[graft] object VecCells {
 

@@ -213,7 +213,9 @@ object EmbedOps {
     * production nlist — measured r7: nlist=1024 fell back to interpreted
     * eval). Exact parity with the replaced array_max / reverse(array_sort)
     * selections is the expressions' contract (same VecDot left-fold
-    * scores, same (s, cell) tie ordering, null scores ordered last). */
+    * scores, same (s, cell) tie ordering, null scores ordered last), with
+    * two deliberate departures: a NULL embedding gets a NULL cell, and a
+    * NaN score sorts last like a NULL one (see [[graft.functions.VecCells]]). */
   private def bestCell(vec: Column, cents: Array[(Int, Array[Double])]): Column =
     graft.functions.GraftFunctions.vec_best_cell(vec,
       typedlit(cents.map(_._1).toSeq), typedlit(cents.map(_._2.toSeq).toSeq))

@@ -5,7 +5,8 @@ import graft.stages._
 import graft.synth.TranscriptGen
 
 /** Per-stage wall-clock profile of the KG pipeline at a given core count.
-  * Usage: ProfileKg <turnsParquet> <cores> */
+  * Usage: ProfileKg <turnsParquet> <cores> [direct] [sp=N]
+  *   [explain | jobs [warm]] [pq] */
 object ProfileKg {
   def main(args: Array[String]): Unit = {
     val path = args(0)
@@ -26,32 +27,15 @@ object ProfileKg {
     // warmup
     new KgPipeline(spark).run(turns.limit(2000)).annotated.count()
 
-    // e2e mode: the bench's exact flagship shape (direct tagging, one
-    // allTriples action), A/B-ing the envoRows sharing strategy —
-    // columnar cache (persistIntermediates) vs deterministic exchange
-    // reuse (reuseExchange). Two timed reps each, cache cleared between.
-    if (args.contains("e2e")) {
-      for (strategy <- Seq("partcache", "cache", "localckpt", "exchange"); rep <- 1 to 2) {
-        time(f"e2e sharing=$strategy rep$rep") {
-          val r = new KgPipeline(spark, PipelineConfig(
-            persistIntermediates = true, dedupeTexts = false,
-            sharing = strategy)).run(turns)
-          val n = r.allTriples.count()
-          spark.sharedState.cacheManager.clearCache()
-          n
-        }
-      }
-      spark.stop()
-      return
-    }
+    // The bench's flagship shape: direct tagging, shared intermediates,
+    // one allTriples action.
+    def flagship() = new KgPipeline(spark, PipelineConfig(
+      persistIntermediates = true, dedupeTexts = false)).run(turns)
 
-    // explain mode: print the allTriples physical plan for a sharing
-    // strategy (reuse/cache) — exchange/scan counts are the scale story
+    // explain mode: print the allTriples physical plan — exchange/scan
+    // counts are the scale story
     if (args.contains("explain")) {
-      val strategy = args.collectFirst { case a if a.startsWith("sharing=") => a.drop(8) }.getOrElse("auto")
-      val r = new KgPipeline(spark, PipelineConfig(
-        persistIntermediates = true, dedupeTexts = false,
-        sharing = strategy)).run(turns)
+      val r = flagship()
       val plan = r.allTriples.queryExecution.executedPlan
       println(plan.toString)
       spark.stop()
@@ -64,7 +48,6 @@ object ProfileKg {
     // The utilization column (taskSum / (wall * cores)) shows which jobs
     // under-fill the machine at high core counts.
     if (args.contains("jobs")) {
-      val strategy = args.collectFirst { case a if a.startsWith("sharing=") => a.drop(8) }.getOrElse("auto")
       final case class JobAcc(start: Long, var end: Long,
         taskMs: java.util.concurrent.atomic.AtomicLong,
         gcMs: java.util.concurrent.atomic.AtomicLong,
@@ -116,29 +99,21 @@ object ProfileKg {
         }
       }
       // codegen/JIT were warmed by the limit(2000) run above; `warm` adds
-      // one full-size uninstrumented run so the instrumented one matches
-      // the e2e mode's rep2 (steady-state) shape. Cache cleared either way
-      // so the instrumented run starts from a clean slate.
-      if (args.contains("warm")) {
-        val w = new KgPipeline(spark, PipelineConfig(
-          persistIntermediates = true, dedupeTexts = false,
-          sharing = strategy)).run(turns)
-        w.allTriples.count()
-      }
+      // one full-size uninstrumented run so the instrumented one measures
+      // the steady-state shape. Cache cleared either way so the
+      // instrumented run starts from a clean slate.
+      if (args.contains("warm")) flagship().allTriples.count()
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val r = new KgPipeline(spark, PipelineConfig(
-        persistIntermediates = true, dedupeTexts = false,
-        sharing = strategy)).run(turns)
-      val n = r.allTriples.count()
+      val n = flagship().allTriples.count()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // let listener events drain
       import scala.jdk.CollectionConverters._
       val rows = jobs.asScala.toSeq.sortBy(_._1)
       val base = rows.headOption.map(_._2.start).getOrElse(0L)
       var prevEnd = base
-      println(f"JOBS e2e sharing=$strategy wall=$wall%.2f s rows=$n cores=$cores")
+      println(f"JOBS e2e wall=$wall%.2f s rows=$n cores=$cores")
       rows.foreach { case (id, acc) =>
         val (s, e) = (acc.start, acc.end)
         val gap = (s - prevEnd) / 1e3

@@ -10,34 +10,57 @@ import graft.synth.TranscriptGen
 class CheckpointSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tripleSet(df: org.apache.spark.sql.DataFrame): Set[(String, String, Double)] =
-    df.select("subj", "obj", "weight").collect()
-      .map(r => (r.getString(0), r.getString(1),
-        math.rint(r.getDouble(2) * 1e9) / 1e9)).toSet
+  private def tripleSet(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, Double, Long)] =
+    df.select("subj", "pred", "obj", "weight", "evidence").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        math.rint(r.getDouble(3) * 1e9) / 1e9, r.getLong(4))).toSet
 
   test("resume from partial checkpoint equals fresh run; manifests have lineage") {
     val turns = (0L until 60L).flatMap(i => TranscriptGen.turnsFor(i, 11L, 6, 10)).toDS.toDF
-    val fresh = tripleSet(new KgPipeline(spark).run(turns).annotated)
+    val fresh = tripleSet(new KgPipeline(spark).run(turns).allTriples)
 
     val dir = Files.createTempDirectory("graft-ckpt").toString
     val cfgd = PipelineConfig(checkpointDir = Some(dir))
+    def manifest(stage: String) = java.nio.file.Paths.get(s"$dir/$stage.manifest.json")
 
-    // first run commits all stages
-    val first = tripleSet(new KgPipeline(spark, cfgd).run(turns).annotated)
+    // first run commits all stages; a flat run commits the fused scorer's
+    // output, never the classic scores/annotated pair
+    val first = tripleSet(new KgPipeline(spark, cfgd).run(turns).allTriples)
     assert(first === fresh)
+    assert(Seq("mentions", "fused", "cooccurrence").forall(st => Files.exists(manifest(st))))
+    assert(Seq("scores", "annotated").forall(st => !Files.exists(manifest(st))))
+
+    // simulate a crash before the last stage: only cooccurrence recomputes
+    Files.delete(manifest("cooccurrence"))
+    assert(tripleSet(new KgPipeline(spark, cfgd).run(turns).allTriples) === fresh)
 
     // simulate a crash after the mentions stage: drop every later manifest
-    for (stage <- Seq("scores", "annotated", "cooccurrence")) {
-      Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/$stage.manifest.json"))
+    for (stage <- Seq("fused", "scores", "annotated", "cooccurrence")) {
+      Files.deleteIfExists(manifest(stage))
     }
-    val resumed = tripleSet(new KgPipeline(spark, cfgd).run(turns).annotated)
+    val resumed = tripleSet(new KgPipeline(spark, cfgd).run(turns).allTriples)
     assert(resumed === fresh)
 
     // manifest sanity: per-partition rows sum to the stage row count
-    val manifest = Files.readString(java.nio.file.Paths.get(s"$dir/mentions.manifest.json"))
-    assert(manifest.contains("\"committed\":true"))
+    val mentions = Files.readString(manifest("mentions"))
+    assert(mentions.contains("\"committed\":true"))
     val rows = spark.read.parquet(s"$dir/mentions").count()
-    assert(manifest.contains(s"\"rows\":$rows,"))
+    assert(mentions.contains(s"\"rows\":$rows,"))
+  }
+
+  test("non-flat runs keep the classic stage layout; resume equals fresh") {
+    val turns = (0L until 40L).flatMap(i => TranscriptGen.turnsFor(i, 13L, 6, 10)).toDS.toDF
+    val score = graft.stages.ScoreConfig("upui", backtracking = true)
+    val fresh = tripleSet(new KgPipeline(spark, PipelineConfig(score = score)).run(turns).allTriples)
+    val dir = Files.createTempDirectory("graft-ckpt-upui").toString
+    val cfgd = PipelineConfig(score = score, checkpointDir = Some(dir))
+    def manifest(stage: String) = java.nio.file.Paths.get(s"$dir/$stage.manifest.json")
+    assert(tripleSet(new KgPipeline(spark, cfgd).run(turns).allTriples) === fresh)
+    assert(Seq("mentions", "scores", "annotated", "cooccurrence")
+      .forall(st => Files.exists(manifest(st))))
+    assert(!Files.exists(manifest("fused")))
+    for (stage <- Seq("annotated", "cooccurrence")) Files.delete(manifest(stage))
+    assert(tripleSet(new KgPipeline(spark, cfgd).run(turns).allTriples) === fresh)
   }
 
   test("committed stage resumes for the same input/config; stale resume fails loudly") {

@@ -550,6 +550,75 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("vec_best_cell / vec_top_cells == the replaced array shapes on adversarial rows") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    // the old shapes: one struct(vec_dot(vec, row_c), cell) per cell, then
+    // array_max / reverse(array_sort). Cells 3 and 5 share a row (exact
+    // score ties on every input); cell 7's zero makes ±Inf·0 = NaN there.
+    val cells = Seq(3, 7, 5, 1)
+    val rows = Seq(Seq(1.0, 2.0, 1.0), Seq(0.0, 1.0, 1.0), Seq(1.0, 2.0, 1.0), Seq(-1.0, -1.0, -1.0))
+    val inf = Double.PositiveInfinity
+    def v(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+    val inputs: Seq[(String, Seq[java.lang.Double])] = Seq(
+      "finite, tied" -> v(2.0, 1.0, 0.0),
+      "ragged" -> v(1.0, 2.0),
+      "null element" -> v(1.0, null, 0.0),
+      "all-null elements" -> v(null, null, null),
+      "NULL embedding" -> null,
+      "NaN element" -> v(Double.NaN, 1.0, 1.0),
+      "+Inf element" -> v(inf, 1.0, 1.0),
+      "-Inf element" -> v(-inf, 1.0, 1.0),
+      "overflow to ±Inf" -> v(1e308, 1e308, 0.0))
+    val schema = StructType(Seq(StructField("name", StringType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(inputs.map { case (n, xs) => Row(n, xs) }), schema)
+    val scored = array(cells.zip(rows).map { case (c, row) =>
+      struct(graft.ops.EmbedOps.dot(col("v"), typedlit(row)).as("s"), lit(c).as("cell"))
+    }: _*)
+    val cellsLit = typedlit(cells)
+    val matLit = typedlit(rows)
+    val out = df.select(col("name"),
+      graft.functions.GraftFunctions.vec_best_cell(col("v"), cellsLit, matLit).as("best"),
+      array_max(scored).getField("cell").as("old_best"),
+      graft.functions.GraftFunctions.vec_top_cells(col("v"), cellsLit, matLit, lit(4)).as("top"),
+      slice(reverse(array_sort(scored)), 1, 4).getField("cell").as("old_top"),
+      graft.functions.GraftFunctions.vec_top_cells(col("v"), cellsLit, matLit, lit(2)).as("top2"),
+      slice(reverse(array_sort(scored)), 1, 2).getField("cell").as("old_top2"))
+      .collect().map { r =>
+        def opt[A](i: Int): Option[A] = if (r.isNullAt(i)) None else Some(r.getAs[A](i))
+        r.getString(0) -> (opt[Int](1), opt[Int](2), opt[Seq[Int]](3), opt[Seq[Int]](4),
+          opt[Seq[Int]](5), opt[Seq[Int]](6))
+      }.toMap
+    // where the native expressions deliberately differ from the old shapes:
+    //  - a NULL embedding gives a NULL cell (null-intolerant), where the old
+    //    shape scored every cell NULL and returned the max cell;
+    //  - a NaN score sorts after every real score, like a NULL one, where
+    //    Spark's ordering put NaN above every double (±Inf order normally)
+    val differs = Map(
+      "NULL embedding" -> (None, None, None),
+      "+Inf element" -> (Some(5), Some(Seq(5, 3, 1, 7)), Some(Seq(5, 3))),
+      "-Inf element" -> (Some(1), Some(Seq(1, 5, 3, 7)), Some(Seq(1, 5))))
+    assert(out.keySet === inputs.map(_._1).toSet)
+    for ((name, (best, oldBest, top, oldTop, top2, oldTop2)) <- out) differs.get(name) match {
+      case Some((eBest, eTop, eTop2)) =>
+        assert((best, top, top2) === ((eBest, eTop, eTop2)), s"$name: native result")
+        assert((best, top, top2) !== ((oldBest, oldTop, oldTop2)), s"$name: expected to differ")
+      case None =>
+        assert(best === oldBest, s"$name: vec_best_cell")
+        assert(top === oldTop, s"$name: vec_top_cells")
+        assert(top2 === oldTop2, s"$name: vec_top_cells p=2")
+    }
+    // the agreeing rows, spelled out: ties go to the larger cell, an
+    // all-NULL (or all-NaN) score vector orders cells descending
+    assert(out("finite, tied")._1 === Some(5) && out("finite, tied")._3 === Some(Seq(5, 3, 7, 1)))
+    for (n <- Seq("ragged", "null element", "all-null elements", "NaN element"))
+      assert(out(n)._1 === Some(7) && out(n)._3 === Some(Seq(7, 5, 3, 1)), n)
+    assert(out("overflow to ±Inf")._3 === Some(Seq(5, 3, 7, 1)))
+  }
+
   test("vec_top_cells rejects a negative p with a readable message") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -224,24 +224,30 @@ class PipelineSpec extends SparkSpec {
 
   test("KgResult.unpersist releases every cache run() created") {
     // a long-lived session composing many pipelines must not accumulate
-    // one envoRows + one fused cache per run until teardown
+    // one envoRows + one fused/scores cache per run until teardown — on
+    // the fused path, the checkpointed fused path and the classic
+    // checkpointed path alike
     val turns = graft.synth.TranscriptGen.generate(spark, 30).toDF
-    val r = new KgPipeline(spark, PipelineConfig(persistIntermediates = true))
-      .run(turns)
-    r.allTriples.count()
-    // while live, the scores projection reads the cached fused frame
-    def usesCache(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collectFirst {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-      }.nonEmpty
-    assert(usesCache(r.scores), "the fused frame should be cached while live")
-    r.unpersist()
-    // a FRESH identical plan must no longer resolve to any cache — if
-    // unpersist leaked a frame, cache lookup would substitute it here
-    val r2 = new KgPipeline(spark, PipelineConfig(persistIntermediates = false))
-      .run(turns)
-    assert(!usesCache(r2.scores), "unpersist left a cache behind")
-    assert(!usesCache(r2.mentionTriples), "unpersist left the envoRows cache behind")
+    def ckptDir() = Some(java.nio.file.Files.createTempDirectory("graft-unpersist").toString)
+    val configs = Seq(
+      "flat" -> PipelineConfig(persistIntermediates = true),
+      "flat, checkpointed" -> PipelineConfig(persistIntermediates = true,
+        checkpointDir = ckptDir()),
+      "upui + backtracking, checkpointed" -> PipelineConfig(persistIntermediates = true,
+        checkpointDir = ckptDir(),
+        score = graft.stages.ScoreConfig("upui", backtracking = true)))
+    for ((name, cfg) <- configs) {
+      spark.catalog.clearCache()
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val r = new KgPipeline(spark, cfg).run(turns)
+      assert(r.allTriples.count() > 0, s"$name: empty KG")
+      assert(!spark.sharedState.cacheManager.isEmpty, s"$name: nothing was cached while live")
+      r.unpersist()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name: unpersist left cached frames")
+      val leftRdds = spark.sparkContext.getPersistentRDDs -- rddsBefore
+      assert(leftRdds.isEmpty, s"$name: unpersist left persisted RDDs registered: " +
+        leftRdds.values.map(r => s"${r.id}:${r.getClass.getSimpleName}").mkString(", "))
+    }
   }
 
   test("ontology triples: typed OBO edges + closure descends_from edges") {

@@ -48,6 +48,29 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.sharedState.cacheManager.clearCache()
   }
 
+  test("checkpointed flat run plans the fused scorer: annotated reads the fused stage") {
+    // a checkpoint dir must not switch the plan shape: the flat run commits
+    // the fused scorer's output as its own stage, and annotated is a
+    // projection of it — one broadcast dim join, no scores×support join
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val turns = graft.synth.TranscriptGen.generate(spark, 40).toDF
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-ckpt").toString
+    val r = new KgPipeline(spark, PipelineConfig(checkpointDir = Some(dir))).run(turns)
+    val opt = r.annotated.queryExecution.optimizedPlan
+    val reads = opt.collect { case lr: LogicalRelation => lr.relation }.flatMap {
+      case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
+      case other => Seq(other.toString)
+    }
+    assert(reads === Seq("fused"), s"annotated must read only the fused stage:\n$opt")
+    assert(opt.collect { case a: Aggregate => a }.isEmpty,
+      s"no support aggregation may remain over the fused stage:\n$opt")
+    assert(opt.collect { case j: Join => j }.length === 1,
+      s"only the concept-dim join may remain:\n$opt")
+    assert(!plan(r.annotated).contains("SortMergeJoin"),
+      "the scores×support SMJ must stay deleted from the checkpointed fused path")
+  }
+
   test("filter pushdown reaches the parquet scan with pruned columns") {
     val p = plan(RelationalOps.filterPushdown(spark, dir))
     assert(p.contains("PushedFilters:"))
