@@ -144,10 +144,10 @@ object SparkEntry {
         .orderBy("conv_id", "envo")),
     // The scorer's upui normalization path (A2/A3: keep-first text dedupe,
     // then keep-first tool dedupe with the null-tool bypass — the
-    // production Salting.keepFirstByAgg machinery) under the gate: docs
-    // grouped into 50 synthetic conversations, turn_idx = doc_id,
-    // text-duplicate class and tool derived deterministically from doc_id
-    // and mirrored verbatim in the oracle.
+    // production rank() = 1 keep-first windows of LinkScore) under the
+    // gate: docs grouped into 50 synthetic conversations, turn_idx =
+    // doc_id, text-duplicate class and tool derived deterministically from
+    // doc_id and mirrored verbatim in the oracle.
     "o4_upui_scoring_restricted" -> ((s, d) => {
       val rows = reshapeToConvs(restrictedEnvoRows(s, d),
         withTextHash = true, withTool = true)
@@ -229,8 +229,9 @@ object SparkEntry {
         .orderBy("curie")
     }),
     // The scorer's ui normalization path (A2: duplicate texts within a
-    // conversation counted once — the production Salting.keepFirstByAgg on
-    // (conv, text_hash)) under the gate: o4's reshaping minus the tool step.
+    // conversation counted once — the production rank() = 1 keep-first on
+    // (conv, text_hash) in LinkScore) under the gate: o4's reshaping minus
+    // the tool step.
     "o8_ui_scoring_restricted" -> ((s, d) => {
       val rows = reshapeToConvs(restrictedEnvoRows(s, d), withTextHash = true)
       graft.stages.LinkScore.score(s, rows, restrictedDict,

@@ -55,7 +55,8 @@ object Checkpoint {
           case _ => () // absent in pre-fingerprint manifests: accept
         }
       }
-      if (!isCommitted(d, name)) {
+      if (isCommitted(d, name)) spark.read.parquet(path)
+      else {
         val t0 = System.nanoTime()
         val df = compute
         df.write.mode("overwrite").parquet(path)
@@ -77,7 +78,9 @@ object Checkpoint {
         Files.writeString(tmp, json)
         Files.move(tmp, manifestPath(d, name), StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
+        // the frame the manifest counted: a second read would plan one
+        // more schema-inference job for the same files
+        written
       }
-      spark.read.parquet(path)
   }
 }

@@ -1,6 +1,7 @@
 package graft.stages
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dict.EnvoDict
 
@@ -31,12 +32,15 @@ final case class ScoreConfig(
  *          order; we pin the deterministic analog: order by turn_idx.
  *
  * Scale notes (10^12 turns): everything below is partial+final hash
- * aggregation or window-over-(conv_id,…) — no driver-side state, no
- * collect. The occurrence count per (conv_id, envo) is aggregated BEFORE
- * the per-conv total is computed, so a mega-conversation collapses to at
- * most ~1.6k rows (|EnvO|) ahead of the per-conv join — map-side combine
- * absorbs the skew that a naive window-count over raw occurrences would
- * concentrate on one partition.
+ * aggregation, a `rank() = 1` keep-first window (planned as a streaming
+ * WindowGroupLimit) or a broadcast join — no driver-side state, no collect,
+ * no self-join. Every key is conv_id-prefixed, so over the conv_id-
+ * partitioned partcache (KgPipeline.run) the scorer is one linear,
+ * partition-local plan over one scan. The occurrence count per (conv_id,
+ * envo) is aggregated BEFORE the per-conv total is computed, so a
+ * mega-conversation collapses to at most ~1.6k rows (|EnvO|) ahead of the
+ * per-conv total — map-side combine absorbs the skew that a naive
+ * window-count over raw occurrences would concentrate on one partition.
  */
 object LinkScore {
 
@@ -46,14 +50,20 @@ object LinkScore {
   def score(spark: SparkSession, envoRows: DataFrame, dict: EnvoDict,
             cfg: ScoreConfig): DataFrame = {
 
-    // --- normalization: choose the surviving TURNS. keep-first is
-    //     implemented as two-level agg + join-back on (keys, min) rather
-    //     than a window: partial aggregation absorbs a conversation that
-    //     repeats one text millions of times, and the join key includes
-    //     turn_idx so hot groups spread across reducers (Salting notes).
+    // --- normalization: choose the surviving TURNS. keep-first is a
+    //     `rank() = 1` filter over a window ordered by turn_idx: the
+    //     optimizer turns it into a WindowGroupLimit, a streaming top-1
+    //     over the sorted input, so the window never buffers a conversation
+    //     that repeats one text millions of times. Over the conv_id-
+    //     partitioned partcache every window is partition-local (no
+    //     exchange, no self-join, one scan); over an un-partitioned input
+    //     the Partial WindowGroupLimit runs before the exchange and absorbs
+    //     repeats map-side. rank (not row_number) keeps every row of the
+    //     first turn — all envo occurrences, and turn_idx ties.
     //     Duplicate texts carry identical envo multisets, so keeping the
     //     min-turn representative is equivalent to the reference's
-    //     set-of-isokeys / keep-first semantics.
+    //     set-of-isokeys / keep-first semantics. Rows with a NULL key are
+    //     dropped (a NULL never names a first turn).
     //     Hash-width note: dedup keys on the 64-bit text_hash WITHOUT the
     //     text. Unlike MentionDetect's global join-back (birthday paradox
     //     over ALL distinct corpus texts — text equality required there),
@@ -64,17 +74,13 @@ object LinkScore {
     //     text bytes through the hot projection. ---
     val survivors = cfg.normalization match {
       case "flat" => envoRows
-      case "ui" =>
-        Salting.keepFirstByAgg(envoRows, Seq("conv_id", "text_hash"), "turn_idx")
+      case "ui" => keepFirstPerText(envoRows)
       case "upui" =>
-        val firstPerText =
-          Salting.keepFirstByAgg(envoRows, Seq("conv_id", "text_hash"), "turn_idx")
         // tool-dedup keeps the first turn per (conv, tool) among text-
-        // survivors; null-tool rows all bypass (seqenv/analysis.py:391-392)
-        val nullTool = firstPerText.filter(col("tool").isNull)
-        val withTool = firstPerText.filter(col("tool").isNotNull)
-        Salting.keepFirstByAgg(withTool, Seq("conv_id", "tool"), "turn_idx")
-          .unionByName(nullTool)
+        // survivors; null-tool rows all bypass (seqenv/analysis.py:391-392):
+        // each turn's null-tool rows form a group of their own
+        keepFirst(keepFirstPerText(envoRows),
+          col("conv_id"), col("tool"), when(col("tool").isNull, col("turn_idx")))
     }
 
     // --- envo occurrences (duplicates within a turn kept) ---
@@ -82,16 +88,15 @@ object LinkScore {
 
     // --- backtracking: each occurrence also contributes one occurrence of
     //     every ancestor (documented intent of analysis.py:371-372; the
-    //     closure table replaces the reference's child_to_parents) ---
+    //     closure table replaces the reference's child_to_parents). One
+    //     broadcast left join with a closure that lists each concept as its
+    //     own first "ancestor"; a concept without closure rows keeps itself
+    //     through the coalesce. ---
     val withAncestors =
       if (!cfg.backtracking) occurrences
-      else {
-        val closureDf = closureFrame(spark, dict)
-        occurrences.unionByName(
-          occurrences
-            .join(broadcast(closureDf), col("envo") === col("child"))
-            .select(col("conv_id"), col("ancestor").as("envo")))
-      }
+      else occurrences
+        .join(broadcast(selfClosureFrame(spark, dict)), col("envo") === col("child"), "left")
+        .select(col("conv_id"), coalesce(col("ancestor"), col("envo")).as("envo"))
 
     // --- restrict: keep strict descendants of the restrict term
     //     (analysis.py:373-374; the restrict node itself is dropped) ---
@@ -113,7 +118,7 @@ object LinkScore {
       // per conversation (the raw-occurrence collapse happened above); the
       // total is a LONG sum of LONG counts — exact and order-invariant, so
       // every oracle's occ/total division is unchanged bit-for-bit.
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("conv_id")
+      val w = Window.partitionBy("conv_id")
       counts.select(col("conv_id"), col("envo"),
         (col("occ").cast("double") / sum("occ").over(w)).as("score"))
     } else {
@@ -159,7 +164,7 @@ object LinkScore {
     val score =
       if (cfg.proportional) {
         // same bounded window-sum as score() — ≤|EnvO| rows per conv
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("conv_id")
+        val w = Window.partitionBy("conv_id")
         col("occ").cast("double") / sum("occ").over(w)
       } else col("occ").cast("double")
     agg.select(col("conv_id"), col("envo"), score.as("score"),
@@ -171,12 +176,30 @@ object LinkScore {
   def supportsFused(cfg: ScoreConfig): Boolean =
     cfg.normalization == "flat" && !cfg.backtracking && cfg.restrict.isEmpty
 
+  private def keepFirstPerText(envoRows: DataFrame): DataFrame =
+    keepFirst(envoRows.filter(col("conv_id").isNotNull && col("text_hash").isNotNull &&
+      col("turn_idx").isNotNull), col("conv_id"), col("text_hash"))
+
+  /** Rows whose turn_idx is the minimum of their `keys` group. */
+  private def keepFirst(df: DataFrame, keys: Column*): DataFrame = {
+    val w = Window.partitionBy(keys: _*).orderBy(col("turn_idx"))
+    df.withColumn("_first", rank().over(w)).filter(col("_first") === 1).drop("_first")
+  }
+
   /** The ancestor-closure dim as a tiny broadcastable DataFrame
     * (child:int, ancestor:int) — 9536 rows from envo_groups.tsv. */
   def closureFrame(spark: SparkSession, dict: EnvoDict): DataFrame = {
     import spark.implicits._
     dict.closure.toSeq
       .flatMap { case (c, as) => as.map(a => (c, a)) }
+      .toDF("child", "ancestor")
+  }
+
+  /** closureFrame plus one (c, c) row per concept that has closure rows. */
+  private def selfClosureFrame(spark: SparkSession, dict: EnvoDict): DataFrame = {
+    import spark.implicits._
+    dict.closure.toSeq
+      .flatMap { case (c, as) => (c +: as.toSeq).map(a => (c, a)) }
       .toDF("child", "ancestor")
   }
 }

@@ -12,10 +12,12 @@ import org.apache.spark.sql.functions._
  *  - the scorer's flat path: groupBy(conv_id, envo) partially aggregates
  *    map-side, so a 10^9-turn conversation collapses to ≤|EnvO| rows per
  *    map task BEFORE the shuffle — already skew-proof;
- *  - ui/upui keep-first windows partition by (conv_id, text_hash): a
- *    conversation that repeats ONE text millions of times concentrates on
- *    one reducer. `saltedKeepFirst` is the two-phase fix: per-salt minima,
- *    then min-of-minima — both phases partial-aggregating.
+ *  - the scorer's ui/upui keep-first (LinkScore) is a `rank() = 1` window,
+ *    which the optimizer plans as a WindowGroupLimit: a streaming top-1
+ *    that never buffers a repeated-text group, with a Partial limit before
+ *    any exchange that absorbs repeats map-side like a partial agg;
+ *  - `keepFirstByAgg` (agg + join-back) is DimBuild's per-gi
+ *    keep-min-rowid dedupe.
  */
 object Salting {
 

@@ -158,6 +158,100 @@ class LinkScoreSpec extends SparkSpec {
     }
   }
 
+  /** One scorer input row: an envo occurrence of a turn. */
+  private case class Occ(conv: String, turn: Option[Int], tool: Option[String],
+                         textHash: Long, envo: Int)
+
+  /** Plain-Scala sequential scorer: walk each conversation in turn_idx
+    * order with a seen-text set and a seen-tool set (NULL tools bypass the
+    * tool check), as seqenv/analysis.py:362-403 does; turns without a
+    * turn_idx have no place in that order and never survive ui/upui. */
+  private def referenceScores(rows: Seq[Occ], cfg: ScoreConfig,
+                              dict: graft.dict.EnvoDict): Map[(String, Int), Double] =
+    rows.groupBy(_.conv).toSeq.flatMap { case (conv, rs) =>
+      val kept = cfg.normalization match {
+        case "flat" => rs.map(_.envo)
+        case norm =>
+          val seenText = scala.collection.mutable.Set.empty[Long]
+          val seenTool = scala.collection.mutable.Set.empty[String]
+          rs.filter(_.turn.isDefined).groupBy(_.turn.get).toSeq.sortBy(_._1).flatMap {
+            case (_, turnRows) =>
+              val t = turnRows.head
+              val keep = seenText.add(t.textHash) &&
+                (norm == "ui" || t.tool.forall(seenTool.add))
+              if (keep) turnRows.map(_.envo) else Nil
+          }
+      }
+      val ancestors = (e: Int) => dict.closure.getOrElse(e, Array.empty[Int]).toSeq
+      val backtracked = if (cfg.backtracking) kept.flatMap(e => e +: ancestors(e)) else kept
+      val restricted = cfg.restrict.fold(backtracked)(root =>
+        backtracked.filter(e => ancestors(e).contains(root)))
+      val counts = restricted.groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val total = counts.values.sum
+      counts.map { case (e, n) =>
+        (conv, e) -> (if (cfg.proportional) n.toDouble / total.toDouble else n.toDouble)
+      }
+    }.toMap
+
+  /** Random scorer input: texts carry fixed envo multisets (with repeats
+    * inside a turn), about a third of the tools and a twentieth of the
+    * turn_idx values are NULL, one mega-conversation repeats one text
+    * thousands of times, and the rows arrive shuffled. */
+  private def randomOccs(seed: Int, concepts: IndexedSeq[Int]): Seq[Occ] = {
+    val rnd = new scala.util.Random(seed)
+    val textEnvos = Vector.fill(40)(
+      Vector.fill(1 + rnd.nextInt(4))(concepts(rnd.nextInt(concepts.size))))
+    val tools = Vector(Some("search"), Some("browser"), Some("python"), None)
+    def conv(id: String, nTurns: Int, text: () => Int): Seq[Occ] = {
+      val idx = rnd.shuffle((0 until nTurns * 3).toVector).take(nTurns)
+      idx.flatMap { i =>
+        val turn = if (rnd.nextInt(20) == 0) None else Some(i)
+        val tool = tools(rnd.nextInt(tools.size))
+        val t = text()
+        textEnvos(t).map(e => Occ(id, turn, tool, t.toLong, e))
+      }
+    }
+    val small = (0 until 30).flatMap(c => conv(s"c$c", 1 + rnd.nextInt(25), () => rnd.nextInt(8)))
+    val mega = conv("mega", 3000, () => if (rnd.nextInt(10) == 0) rnd.nextInt(40) else 0)
+    rnd.shuffle(small ++ mega)
+  }
+
+  test("differential: ui/upui/backtracking/restrict equal a sequential reference, bit for bit") {
+    val dict = KgPipeline.sharedDict
+    val noAncestors = dict.intToCurie.keys.toSeq.sorted
+      .filter(e => dict.closure.getOrElse(e, Array.empty[Int]).isEmpty).take(3)
+    assert(noAncestors.nonEmpty)
+    val underWaterBody = dict.descendantsOf(63).toSeq.sorted.take(4)
+    // 20/1000001/43/447/569: the fixture concepts; 63: the restrict root
+    // itself; 999999999: no dictionary entry at all
+    val concepts = (Seq(15, 63, 2113, 20, 1000001, 43, 447, 569, 999999999) ++
+      noAncestors ++ underWaterBody).distinct.toIndexedSeq
+    val occs = randomOccs(seed = 17, concepts)
+    val plain = occs.map(o => (o.conv, o.turn, o.tool, o.textHash, o.envo))
+      .toDF("conv_id", "turn_idx", "tool", "text_hash", "envo")
+    // the pipeline's partcache layout (KgPipeline.run, persistIntermediates)
+    val partcache = plain.repartition(4, $"conv_id")
+      .sortWithinPartitions($"conv_id", $"turn_idx").persist()
+    partcache.count()
+    try {
+      for {
+        norm <- Seq("flat", "ui", "upui")
+        proportional <- Seq(true, false)
+        backtracking <- Seq(false, true)
+        restrict <- Seq(None, Some(63))
+      } {
+        val cfg = ScoreConfig(norm, proportional, backtracking, restrict)
+        val expected = referenceScores(occs, cfg, dict)
+        assert(expected.nonEmpty, s"$cfg: the reference scored nothing")
+        for ((layout, input) <- Seq("plain" -> plain, "partcache" -> partcache)) {
+          val got = LinkScore.score(spark, input, dict, cfg)
+            .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
+          assert(got === expected, s"$cfg over the $layout input")
+        }
+      }
+    } finally partcache.unpersist()
+  }
+
   test("conversations with no mentions are absent from the output") {
     val turns = Seq(
       turn("c1", 0, "the ocean was calm", None),

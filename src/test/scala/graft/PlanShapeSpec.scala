@@ -48,6 +48,67 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.sharedState.cacheManager.clearCache()
   }
 
+  test("ui/upui/backtracking scorer: one partcache scan, a linear partition-local plan") {
+    // keep-first is a rank() = 1 window (planned as a streaming
+    // WindowGroupLimit) and backtracking one broadcast join with a
+    // self-inclusive closure: no self-join re-reads the partcache, no union
+    // merges two copies of it, nothing re-shuffles it
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    import graft.stages.ScoreConfig
+    // stops at cache scans: the partcache's own plan holds its repartition
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: InMemoryTableScanExec => Seq(s)
+      case n => n +: n.children.flatMap(walk)
+    }
+    val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
+    for (norm <- Seq("ui", "upui")) {
+      val cfg = ScoreConfig(norm, proportional = true, backtracking = true)
+      val r = new KgPipeline(spark, PipelineConfig(score = cfg, persistIntermediates = true))
+        .run(turns)
+      try {
+        // r.scores is the persisted scorer output: inspect the plan it caches
+        val scorer = walk(r.scores.queryExecution.executedPlan).collectFirst {
+          case s: InMemoryTableScanExec => s.relation.cachedPlan
+        }.getOrElse(fail("scores must be persisted on a persistIntermediates run"))
+        val nodes = walk(scorer)
+        assert(nodes.count(_.isInstanceOf[InMemoryTableScanExec]) === 1,
+          s"$norm: the scorer must scan the partcache exactly once:\n$scorer")
+        val forbidden = nodes.collect {
+          case n @ (_: ShuffleExchangeExec | _: SortMergeJoinExec |
+                    _: ShuffledHashJoinExec | _: UnionExec) => n.nodeName
+        }
+        assert(forbidden.isEmpty, s"$norm: $forbidden in the scorer:\n$scorer")
+        val limits = nodes.collect { case w: WindowGroupLimitExec => w }
+        assert(limits.length === (if (norm == "ui") 1 else 2),
+          s"$norm: one WindowGroupLimit per keep-first:\n$scorer")
+      } finally {
+        r.unpersist()
+        spark.sharedState.cacheManager.clearCache()
+      }
+    }
+    // un-partitioned input (the oracle queries): the Partial limit runs
+    // before the exchange and absorbs repeats map-side
+    val rows = graft.stages.MentionDetect.envoRows(
+      graft.stages.MentionDetect.detect(spark, turns))
+    val scored = graft.stages.LinkScore.score(spark, rows, KgPipeline.sharedDict,
+      ScoreConfig("ui", proportional = false))
+    val partialBelowExchange = walk(scored.queryExecution.executedPlan).exists {
+      case e: ShuffleExchangeExec => walk(e.child).exists {
+        case w: WindowGroupLimitExec => w.mode == Partial
+        case _ => false
+      }
+      case _ => false
+    }
+    assert(partialBelowExchange,
+      s"a Partial WindowGroupLimit must sit below the exchange:\n${scored.queryExecution.executedPlan}")
+  }
+
   test("checkpointed flat run plans the fused scorer: annotated reads the fused stage") {
     // a checkpoint dir must not switch the plan shape: the flat run commits
     // the fused scorer's output as its own stage, and annotated is a
