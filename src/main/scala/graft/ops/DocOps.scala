@@ -995,8 +995,8 @@ object DocOps {
   /** The d3+d4+d12 gate signals in ONE projection over ONE scan of the
     * corpus — what the curation funnel consumes. Three independent gate
     * queries would scan the documents three times; at 100 TB this is the
-    * difference between one pass and three. Callers persist the result and
-    * filter it per gate (quality NULL for empty-token docs — fails any
+    * difference between one pass and three. The funnel folds it into one
+    * flag per gate and doc (quality NULL for empty-token docs — fails any
     * threshold, matching qualityScore's size>0 pre-filter). */
   def gateSignals(spark: SparkSession, dir: String): DataFrame =
     gateSignalsOf(curationFrame(spark, dir))

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Sessions
 import graft.ops.{Components, DocOps}
 
@@ -38,20 +39,21 @@ import graft.ops.{Components, DocOps}
  * table to out_dir. Every stage is deterministic, so reruns produce
  * identical funnels.
  *
- * Single-read: the WHOLE funnel derives from ONE persisted tokenized
- * corpus frame (DocOps.curationFrame — doc_id, text, lang, toks). Exact
- * dedup hashes its text, d7/d13 shingle off its toks, the three projection
- * gates filter one signal projection of it, and chunking windows its toks
- * — documents.parquet is scanned (and the corpus tokenized) exactly once
- * per funnel run where the naive composition paid three scan+tokenize
- * passes (CurateSpec pins the leaf-scan count). The three gates
- * additionally share one persisted signal frame (DocOps.gateSignalsOf) so
- * the quality/lang/sample filters are three reads of tiny scalars, not
- * three token-array passes.
+ * One verdict frame: the WHOLE funnel derives from ONE persisted tokenized
+ * corpus frame (DocOps.curationFrameWide — doc_id, text, lang, toks), so
+ * documents.parquet is scanned and tokenized exactly once per run. Every
+ * gate but exact dedup is a function of the whole corpus, not of the
+ * stage before it, so each gate is one doc_id-keyed keep or drop set
+ * left-joined onto the corpus rows, and one `passed` column counts the
+ * leading gates a document passes ([[verdicts]]). The verdict frame is
+ * persisted once; one aggregation counts every document stage, and the
+ * chunks and the split read its full survivors. Stage plans stay of
+ * constant depth: no stage is a join over an earlier stage's cache.
  *
- *   sbt -batch "runMain graft.tools.CurateCli --docs_dir /root/testdata/sf0.001 \
- *     --out_dir /tmp/curated [--min_quality 0.5] [--sample_en 0.25] \
- *     [--benchmark_n 20] [--chunk_tokens 50] [--overlap 10] [--num_threads 8]"
+ *   sbt -batch "runMain graft.tools.CurateCli --docs_dir DOCS_DIR \
+ *     --out_dir OUT_DIR [--min_quality 0.5] [--sample_en 0.25] \
+ *     [--benchmark_n 20] [--chunk_tokens 50] [--overlap 10] \
+ *     [--strip_df_cap 5] [--train_frac 0.75] [--num_threads 8]"
  */
 object CurateCli {
 
@@ -65,158 +67,142 @@ object CurateCli {
         * corpus; production corpora want the operator default (50+). */
       stripDfCap: Int = 5,
       /** d26 terminal split: train share of near-dup cluster buckets. */
-      trainFrac: Double = 0.75)
+      trainFrac: Double = 0.75) {
+    // checked here, not where each value is first read: the chunk and
+    // split ops only run after the whole funnel has run
+    require(!minQuality.isNaN, "minQuality must be a number")
+    require(sampleEn >= 0 && sampleEn <= 1, s"sampleEn must be in [0, 1], got $sampleEn")
+    require(overlap >= 0 && overlap < chunkTokens,
+      s"need 0 <= overlap < chunkTokens, got overlap=$overlap chunkTokens=$chunkTokens")
+    require(stripDfCap >= 0, s"stripDfCap must be >= 0, got $stripDfCap")
+    require(trainFrac > 0 && trainFrac < 1, s"trainFrac must be in (0, 1), got $trainFrac")
+  }
+
+  /** The document stages after "input", in funnel order, each with its
+    * pass condition over the gate-input columns [[verdicts]] joins. */
+  private def gates(cfg: CurateConfig): Seq[(String, Column)] = Seq(
+    "priority_dedup" -> col("d24").isNotNull,
+    "exact_dedup" -> col("d1").isNotNull,
+    "near_dedup" -> col("d9").isNull,
+    // the benchmark docs go too: eval data never belongs in training data
+    "decontaminate" -> (col("doc_id") >= cfg.benchmarkN && col("d13").isNull),
+    "quality_gate" -> col("d3"),
+    "lang_gate" -> col("d4"),
+    "classifier_gate" -> col("d22").isNotNull,
+    "mixture_sample" -> col("d23").isNotNull,
+    "stratified_sample" -> col("d12"),
+    "boilerplate_strip" -> (size(col("toks")) > 0))
+
+  /** One row per row of the persisted `corpus`: its doc_id, `passed` = how
+    * many leading [[gates]] it passes, and its d17-stripped toks when it
+    * passes them all (NULL otherwise). `clusters` is the persisted d9
+    * cluster frame of the same corpus. */
+  private[graft] def verdicts(corpus: DataFrame, clusters: DataFrame,
+                              cfg: CurateConfig): DataFrame = {
+    // each gate input is a doc_id set made distinct, so the left joins
+    // never multiply corpus rows: a gate keeps a row iff its doc_id is in
+    // the keep set (not in the drop set)
+    def flag(name: String, ids: DataFrame): DataFrame =
+      ids.select("doc_id").distinct().withColumn(name, lit(true))
+    val d24 = DocOps.priorityDedupOf(corpus).filter(col("kept") === 1L)
+    // d1 over the d24 SURVIVORS: over the full corpus its keep-min-doc_id
+    // and d24's keep-best-rank pick different copies whenever the
+    // best-ranked copy is not the min-id copy, and the class lost both
+    val d1 = DocOps.exactDedupOf(corpus.join(d24.select("doc_id"), Seq("doc_id"), "left_semi"))
+      .select(col("keep_id").as("doc_id"))
+    val d13 = DocOps.decontaminateOf(DocOps.shinglesOf(corpus), cfg.benchmarkN, minShared = 3)
+    // d3 + d4 + d12 off ONE signal projection, one flag per doc
+    val signals = DocOps.gateSignalsOf(corpus).groupBy("doc_id").agg(
+      max(col("quality") >= cfg.minQuality).as("d3"),
+      max(col("pred_lang") =!= "und").as("d4"),
+      max(col("bucket") < DocOps.sampleCut(Map("en" -> cfg.sampleEn))).as("d12"))
+    // `when` takes a NULL condition (NULL quality, NULL doc_id) as false:
+    // the row fails that gate, as a filter drops it
+    val conds = gates(cfg).map(_._2)
+    val passed = conds.zipWithIndex.foldRight(lit(conds.size)) {
+      case ((cond, i), rest) => when(cond, rest).otherwise(i)
+    }
+    // d17 strips the whole corpus (its df table is corpus-wide, like d13)
+    // and keeps one row per corpus row: the frame the gates join onto
+    Seq(flag("d24", d24), flag("d1", d1),
+      flag("d9", clusters.filter(col("doc_id") =!= col("representative"))),
+      flag("d13", d13), signals,
+      flag("d22", DocOps.qualityClassifyOf(corpus, buckets = 4096).filter(col("kept") === 1L)),
+      flag("d23", DocOps.domainMixSampleOf(corpus, DocOps.defaultMixWeights,
+        DocOps.defaultBudgetFrac)))
+      .foldLeft(DocOps.strippedToksOf(corpus, cfg.stripDfCap))(_.join(_, Seq("doc_id"), "left"))
+      .withColumn("passed", passed)
+      .select(col("doc_id"), col("passed"),
+        when(col("passed") === conds.size, col("toks")).as("toks"))
+  }
 
   /** Runs the funnel; returns (stage, rowsKept) in order and writes
-    * chunks + funnel to outDir. */
+    * chunks + split + funnel to outDir. */
   def run(spark: SparkSession, dir: String, outDir: String,
           cfg: CurateConfig = CurateConfig()): Seq[(String, Long)] = {
-    // THE one corpus read: every stage below derives from this persisted
-    // tokenized frame — nothing else touches documents.parquet
-    val corpus = DocOps.curationFrameWide(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val funnel = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // stage frames are persisted (each feeds the next stage's semi-join AND
-    // its own count) but must not outlive the run — handles retained here,
-    // unpersisted after the chunks write (CurateSpec asserts none remain)
-    val stageFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, kept: DataFrame): DataFrame = {
-      val k = kept.persist()
-      stageFrames += k
-      funnel += name -> k.count()
-      k
-    }
+    // every frame persisted here (d7's internal ones included) is released
+    // once the outputs are written; CurateSpec asserts none remain
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df.persist(StorageLevel.MEMORY_AND_DISK); df }
+    // THE one corpus read: nothing else touches documents.parquet
+    val corpus = hold(DocOps.curationFrameWide(spark, dir))
+    // d7 → d9: the near-dup gate and the terminal d26 split both read it
+    val clusters = hold(Components.dupClusters(spark,
+      DocOps.minhashLshPairsOf(corpus, persisted = held)))
+    val verdict = hold(verdicts(corpus, clusters, cfg))
 
-    val all = stage("input", corpus.select("doc_id"))
+    // one aggregation counts every document stage
+    val names = "input" +: gates(cfg).map(_._1)
+    val counts = verdict.agg(count(lit(1)),
+      names.indices.tail.map(i => count(when(col("passed") >= i, true))): _*).head()
 
-    // d24: cross-source duplicate classes keep the best-ranked source's
-    // copy — FIRST, so the source-aware rule sees every copy of a class
-    // (after d1's id-keyed keep-min the better-ranked copy might be gone)
-    val prioritized = stage("priority_dedup",
-      all.join(DocOps.priorityDedupOf(corpus).filter(col("kept") === 1L)
-        .select("doc_id"), Seq("doc_id"), "left_semi"))
-
-    // d1: one survivor per exact content hash, computed OVER THE d24
-    // SURVIVORS (belt-and-braces content gate + funnel telemetry). Over the
-    // full corpus this silently emptied whole content classes: d1's
-    // keep-min-doc_id and d24's keep-best-rank pick different copies
-    // whenever the best-ranked copy is not the min-id copy, and the
-    // semi-join then kept neither (r7 fix, per-class advice finding).
-    val exact = stage("exact_dedup",
-      prioritized.join(DocOps.exactDedupOf(
-          corpus.join(prioritized, Seq("doc_id"), "left_semi"))
-        .select(col("keep_id").as("doc_id")), Seq("doc_id"), "left_semi"))
-
-    // d7 → d9: drop every near-dup cluster member except its representative.
-    // The shingle rows both d7 and d13 consume come off the shared frame's
-    // cached toks (a projection, not a scan). The cluster frame is
-    // persisted: the near-dup gate consumes it here and the TERMINAL d26
-    // split keys its holdout by the same representatives. d7's internal
-    // persists join the stage frames, released with them after the run.
-    val clusters = Components
-      .dupClusters(spark, DocOps.minhashLshPairsOf(corpus, persisted = stageFrames))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    stageFrames += clusters
-    val nearDupLosers = clusters
-      .filter(col("doc_id") =!= col("representative"))
-      .select("doc_id")
-    val nearDeduped = stage("near_dedup",
-      exact.join(nearDupLosers, Seq("doc_id"), "left_anti"))
-
-    // d13: drop docs overlapping the benchmark (and the benchmark itself —
-    // eval data never belongs in the training corpus)
-    val contaminated = DocOps.decontaminateOf(DocOps.shinglesOf(corpus),
-      cfg.benchmarkN, minShared = 3).select("doc_id")
-    val decontaminated = stage("decontaminate",
-      nearDeduped
-        .filter(col("doc_id") >= cfg.benchmarkN)
-        .join(contaminated, Seq("doc_id"), "left_anti"))
-
-    // d3 + d4 + d12 gates off ONE persisted single-pass signal projection
-    val signals = DocOps.gateSignalsOf(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gated1 = stage("quality_gate",
-      decontaminated.join(
-        signals.filter(col("quality") >= cfg.minQuality).select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-    val gated = stage("lang_gate", gated1.join(
-      signals.filter(col("pred_lang") =!= "und").select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-
-    // d22: the hashed-linear classifier gate (positive logit keeps) —
-    // one more derivation of the shared corpus frame
-    val classified = stage("classifier_gate", gated.join(
-      DocOps.qualityClassifyOf(corpus, buckets = 4096)
-        .filter(col("kept") === 1L).select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-
-    // d23: language-mixture re-balancing to the token budget (per-lang
-    // totals are one tiny action against the cached corpus)
-    val mixed = stage("mixture_sample", classified.join(
-      DocOps.domainMixSampleOf(corpus, DocOps.defaultMixWeights,
-        DocOps.defaultBudgetFrac).select("doc_id"),
-      Seq("doc_id"), "left_semi"))
-
-    val sampled = stage("stratified_sample",
-      mixed.join(
-        signals.filter(col("bucket") < DocOps.sampleCut(Map("en" -> cfg.sampleEn)))
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-    signals.unpersist()
-
-    // d17: strip high-df boilerplate spans from the survivors' token
-    // streams (df table over the WHOLE corpus, like decontamination);
-    // docs reduced to nothing but boilerplate drop out of the funnel here
-    // persisted: both the kept-count action and the chunks write consume
-    // it, and its upstream (corpus-wide shingle-df agg + coverage agg)
-    // must not run twice; released with the other stage frames
-    val strippedSurvivors = DocOps.strippedToksOf(corpus, cfg.stripDfCap)
-      .join(sampled, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    stageFrames += strippedSurvivors
-    val stripKept = stage("boilerplate_strip",
-      strippedSurvivors.filter(size(col("toks")) > 0).select("doc_id"))
-
-    // d11: chunk the stripped survivors
-    val chunks = DocOps.chunkDocsOf(strippedSurvivors, cfg.chunkTokens, cfg.overlap)
-      .join(stripKept, Seq("doc_id"), "left_semi")
-    chunks.write.mode("overwrite").parquet(s"$outDir/chunks")
-    funnel += "chunks" -> spark.read.parquet(s"$outDir/chunks").count()
+    // d11: chunk the survivors' stripped token streams
+    val survivors = verdict.filter(col("passed") === names.size - 1)
+    DocOps.chunkDocsOf(survivors, cfg.chunkTokens, cfg.overlap)
+      .write.mode("overwrite").parquet(s"$outDir/chunks")
+    val nChunks = spark.read.parquet(s"$outDir/chunks").count()
 
     // d26 (terminal): train/eval holdout keyed by the d9 cluster
-    // representative — the SAME persisted cluster frame the near-dup gate
-    // used, so no near-dup pair can straddle the split even when one
-    // member survived a later gate and its twin did not (the bucket is a
-    // function of the representative, not the survivor)
-    val split = DocOps.clusterSplitOf(stripKept, clusters, cfg.trainFrac)
-      .persist()
-    stageFrames += split
-    split.write.mode("overwrite").parquet(s"$outDir/split")
-    funnel += "split_train" -> split.filter(col("split") === "train").count()
-    funnel += "split_eval" -> split.filter(col("split") === "eval").count()
+    // representative — the SAME cluster frame the near-dup gate used, so
+    // no near-dup pair can straddle the split even when one member
+    // survived a later gate and its twin did not
+    DocOps.clusterSplitOf(survivors.select("doc_id"), clusters, cfg.trainFrac)
+      .write.mode("overwrite").parquet(s"$outDir/split")
+    val sides = spark.read.parquet(s"$outDir/split").groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-    corpus.unpersist()
-    stageFrames.foreach(_.unpersist())
+    held.foreach(_.unpersist())
     // the cluster labels' local checkpoint sits under the (now released)
     // cluster cache and outside the cache manager
     Components.releaseCheckpoint(clusters)
 
+    val funnel = names.indices.map(i => names(i) -> counts.getLong(i)) ++ Seq(
+      "chunks" -> nChunks, "split_train" -> sides.getOrElse("train", 0L),
+      "split_eval" -> sides.getOrElse("eval", 0L))
     import spark.implicits._
-    funnel.toSeq.zipWithIndex
+    funnel.zipWithIndex
       .map { case ((s, n), i) => (i, s, n) }.toDF("stage_idx", "stage", "rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/funnel")
-    funnel.toSeq
+    funnel
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
+  private val Usage = "usage: CurateCli --docs_dir DIR --out_dir DIR [--min_quality 0.5] " +
+    "[--sample_en 0.25] [--benchmark_n 20] [--chunk_tokens 50] [--overlap 10] " +
+    "[--strip_df_cap 5] [--train_frac 0.75] [--num_threads 8]"
+
+  /** `--key value` pairs; a key the usage does not list, or one without a
+    * value, fails with the usage instead of running with a default. */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
+    val flags = "--(\\w+)".r.findAllMatchIn(Usage).map(_.group(1)).toSet
+    args.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && flags(k.drop(2)) => k.drop(2) -> v
+      case bad => throw new IllegalArgumentException(s"bad argument ${bad.mkString(" ")}; $Usage")
+    }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
-    require(a.contains("docs_dir") && a.contains("out_dir"),
-      "usage: CurateCli --docs_dir DIR --out_dir DIR [--min_quality 0.5] " +
-        "[--sample_en 0.25] [--benchmark_n 20] [--chunk_tokens 50] [--overlap 10] " +
-        "[--num_threads 8]")
+    require(a.contains("docs_dir") && a.contains("out_dir"), Usage)
     val cfg = CurateConfig(
       minQuality = a.getOrElse("min_quality", "0.5").toDouble,
       sampleEn = a.getOrElse("sample_en", "0.25").toDouble,

@@ -1,11 +1,124 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions._
+import graft.ops.{Components, DocOps}
 import graft.tools.CurateCli
+import graft.tools.CurateCli.CurateConfig
 
 /** The end-to-end curation funnel: monotone, deterministic, and each gate
   * provably bites on the driver testdata. */
 class CurateSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
+
+  /** Leaves of an executed plan. AdaptiveSparkPlanExec is itself a
+    * LeafExecNode — descend into its current plan or the leaf check never
+    * sees the real scans. */
+  private def realLeaves(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => realLeaves(a.executedPlan)
+    case leaf if leaf.children.isEmpty => Seq(leaf)
+    case n => n.children.flatMap(realLeaves)
+  }
+
+  /** The persisted corpus and d9 cluster frames CurateCli.run builds,
+    * released (with d7's persists and the labels' checkpoint) after `f`. */
+  private def withFunnelFrames[T](docsDir: String)(f: (DataFrame, DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val corpus = DocOps.curationFrameWide(spark, docsDir).persist()
+    held += corpus
+    val clusters = Components.dupClusters(spark,
+      DocOps.minhashLshPairsOf(corpus, persisted = held)).persist()
+    held += clusters
+    try f(corpus, clusters)
+    finally {
+      held.foreach(_.unpersist())
+      Components.releaseCheckpoint(clusters)
+    }
+  }
+
+  /** The composition the verdict frame replaced, as the reference: every
+    * stage a semi- or anti-join over the stage before it, over the same
+    * DocOps ops. Returns the funnel and the strip survivors' doc_ids. */
+  private def chainFunnel(docsDir: String, cfg: CurateConfig): (Seq[(String, Long)], Seq[Long]) =
+    withFunnelFrames(docsDir) { (corpus, clusters) =>
+      def semi(a: DataFrame, b: DataFrame) = a.join(b.select("doc_id"), Seq("doc_id"), "left_semi")
+      def anti(a: DataFrame, b: DataFrame) = a.join(b.select("doc_id"), Seq("doc_id"), "left_anti")
+      val signals = DocOps.gateSignalsOf(corpus)
+      val all = corpus.select("doc_id")
+      val prioritized = semi(all, DocOps.priorityDedupOf(corpus).filter(col("kept") === 1L))
+      val exact = semi(prioritized, DocOps.exactDedupOf(semi(corpus, prioritized))
+        .select(col("keep_id").as("doc_id")))
+      val nearDeduped = anti(exact, clusters.filter(col("doc_id") =!= col("representative")))
+      val decontaminated = anti(nearDeduped.filter(col("doc_id") >= cfg.benchmarkN),
+        DocOps.decontaminateOf(DocOps.shinglesOf(corpus), cfg.benchmarkN, minShared = 3))
+      val quality = semi(decontaminated, signals.filter(col("quality") >= cfg.minQuality))
+      val lang = semi(quality, signals.filter(col("pred_lang") =!= "und"))
+      val classified = semi(lang,
+        DocOps.qualityClassifyOf(corpus, buckets = 4096).filter(col("kept") === 1L))
+      val mixed = semi(classified, DocOps.domainMixSampleOf(corpus, DocOps.defaultMixWeights,
+        DocOps.defaultBudgetFrac))
+      val sampled = semi(mixed,
+        signals.filter(col("bucket") < DocOps.sampleCut(Map("en" -> cfg.sampleEn))))
+      val stripped = semi(DocOps.strippedToksOf(corpus, cfg.stripDfCap), sampled)
+      val stripKept = stripped.filter(size(col("toks")) > 0).select("doc_id")
+      val stages = Seq("input" -> all, "priority_dedup" -> prioritized, "exact_dedup" -> exact,
+        "near_dedup" -> nearDeduped, "decontaminate" -> decontaminated,
+        "quality_gate" -> quality, "lang_gate" -> lang, "classifier_gate" -> classified,
+        "mixture_sample" -> mixed, "stratified_sample" -> sampled,
+        "boilerplate_strip" -> stripKept)
+      val chunks = semi(DocOps.chunkDocsOf(stripped, cfg.chunkTokens, cfg.overlap), stripKept)
+      val split = DocOps.clusterSplitOf(stripKept, clusters, cfg.trainFrac)
+      val funnel = stages.map { case (s, df) => s -> df.count() } ++ Seq(
+        "chunks" -> chunks.count(),
+        "split_train" -> split.filter(col("split") === "train").count(),
+        "split_eval" -> split.filter(col("split") === "eval").count())
+      (funnel, stripKept.collect().map(_.getLong(0)).sorted.toSeq)
+    }
+
+  /** A small corpus that puts every funnel edge in reach of a gate. Built
+    * from filler documents (random words, a few language markers), with:
+    * cross-source exact copies whose best-ranked copy is not the min
+    * doc_id; empty and punctuation-only docs (NULL quality); benchmark docs
+    * (doc_id < 20) and a doc quoting one; boilerplate sentences in more
+    * than 5 docs each plus docs made only of them; a near-dup cluster;
+    * and one doc_id carried by two rows. */
+  private def writeEdgeCorpus(path: String): Unit = {
+    import spark.implicits._
+    val r = new scala.util.Random(7)
+    val langs = Vector.fill(70)("en") ++ Vector.fill(8)("fr") ++ Vector.fill(7)("es") ++
+      Vector.fill(5)("zh") ++ Vector.fill(2)("de") ++ Vector.fill(8)("pt")
+    def words(n: Int): Seq[String] = Seq.fill(n)(
+      if (r.nextInt(8) == 0) Seq("the", "of", "and", "le", "el", "der")(r.nextInt(6))
+      else s"w${r.nextInt(400)}")
+    val boiler = (0 until 8).map(k => ("the" +: (1 to 7).map(j => s"bp${k}x$j")).mkString(" "))
+    val filler = (0L until 160L).map { i =>
+      val body = words(25 + r.nextInt(35))
+      // docs >= 20 carry boilerplate: a benchmark doc carrying it would
+      // contaminate every doc quoting the sentence
+      val text = if (i >= 20 && i % 3 == 0) (body :+ boiler((i % 8).toInt)).mkString(" ")
+        else body.mkString(" ")
+      i -> (i, text, langs(r.nextInt(langs.length)), s"src${1 + r.nextInt(11)}")
+    }.toMap
+    val base = filler(50L)._2
+    val edges = Seq(
+      // exact copies, the best-ranked (src0) on the larger doc_id; one
+      // class of two, one of three
+      (160L, filler(60L)._2, "en", "src0"), (161L, filler(61L)._2, "fr", "src0"),
+      (162L, filler(61L)._2, "fr", "src9"),
+      (170L, "", "en", "src1"), (171L, "!!! ...", "en", "src1"), (172L, "  ;; ", "fr", "src3"),
+      // quotes six words of benchmark doc 5
+      (175L, (words(20) ++ filler(5L)._2.split(" ").take(6)).mkString(" "), "fr", "src4"),
+      // near-dup cluster around doc 50
+      (180L, base.replaceFirst("w", "zz"), "en", "src3"), (181L, base + " extra", "en", "src5"),
+      (150L, words(30).mkString(" "), "es", "src6")) ++
+      (0 until 4).map(j => (190L + j, s"${boiler(2 * j)} ${boiler(2 * j + 1)}", "fr", "src7"))
+    (filler.values.toSeq.sortBy(_._1) ++ edges)
+      .toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(s"$path/documents.parquet")
+  }
 
   test("curation funnel is monotone decreasing and deterministic") {
     val out1 = java.nio.file.Files.createTempDirectory("graft-curate1").toString
@@ -50,16 +163,15 @@ class CurateSpec extends SparkSpec {
     assert(f1 === f2, "funnel must be rerun-deterministic")
 
     // no funnel cache outlives the run: lookup by canonicalized plan — if
-    // run() leaked the corpus, a stage frame (input = corpus.select), or
-    // the signal frame, these rebuilt twins would still hit the cache
-    import graft.ops.DocOps
+    // run() leaked the corpus, a projection of it, or the signal frame,
+    // these rebuilt twins would still hit the cache
     val cm = spark.sharedState.cacheManager
     val corpusTwin = DocOps.curationFrame(spark, dir)
-    def cached(df: org.apache.spark.sql.DataFrame) =
+    def cached(df: DataFrame) =
       cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
     assert(cached(corpusTwin).isEmpty, "corpus frame leaked")
     assert(cached(corpusTwin.select("doc_id")).isEmpty,
-      "funnel stage frame leaked")
+      "corpus projection leaked")
     assert(cached(DocOps.gateSignalsOf(corpusTwin)).isEmpty,
       "gate-signal frame leaked")
 
@@ -100,95 +212,114 @@ class CurateSpec extends SparkSpec {
   }
 
   test("gate signals: one corpus scan serves all three projection gates") {
-    import org.apache.spark.sql.functions._
-    import graft.ops.DocOps
-    val signals = DocOps.gateSignals(spark, dir).persist()
-    try {
-      signals.count() // materialize the cache
-      val q = signals.filter(col("quality") >= 0.5).select("doc_id")
-      val l = signals.filter(col("pred_lang") =!= "und").select("doc_id")
-      val s = signals.filter(col("bucket") < DocOps.sampleCut(Map("en" -> 0.25)))
-        .select("doc_id")
-      // every LEAF of the combined gate plan must be the cached signals —
-      // a FileSourceScan leaf would mean a gate re-scans the corpus (the
-      // cached relation's printed description still embeds the original
-      // scan text, so check node types, not the plan string).
-      // AdaptiveSparkPlanExec is itself a LeafExecNode (and since the r7
-      // scan fan-out the cached signals' lineage carries an Exchange, so
-      // the union IS AQE-wrapped) — descend it like the funnel leaf test
-      def realLeaves(p: org.apache.spark.sql.execution.SparkPlan):
-          Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          realLeaves(a.executedPlan)
-        case leaf if leaf.children.isEmpty => Seq(leaf)
-        case n => n.children.flatMap(realLeaves)
-      }
-      val leaves = realLeaves(q.union(l).union(s).queryExecution.executedPlan)
-      assert(leaves.nonEmpty && leaves.forall(
-        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
-        s"all three gates must read the cached signals, not re-scan parquet: $leaves")
+    withFunnelFrames(dir) { (corpus, clusters) =>
+      // the quality/lang/sample gates are columns of the verdict frame:
+      // every LEAF of its plan must be a cached frame — a FileSourceScan
+      // leaf would mean a gate re-scans the corpus (the cached relation's
+      // printed description still embeds the original scan text, so check
+      // node types, not the plan string)
+      val leaves = realLeaves(
+        CurateCli.verdicts(corpus, clusters, CurateConfig()).queryExecution.executedPlan)
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
+        s"the verdict frame must read the cached corpus, not re-scan parquet: $leaves")
 
       // and each signal gate selects exactly the docs the standalone
       // operator (the DuckDB-oracled query) would select
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.collect().map(_.getLong(0)).toSet
-      assert(ids(q) === ids(DocOps.qualityScore(spark, dir)
-        .filter(col("quality") >= 0.5).select("doc_id")))
-      assert(ids(l) === ids(DocOps.langId(spark, dir)
-        .filter(col("pred_lang") =!= "und").select("doc_id")))
-      assert(ids(s) === ids(DocOps.stratifiedSample(spark, dir, Map("en" -> 0.25))
-        .select("doc_id")))
-    } finally signals.unpersist()
+      val signals = DocOps.gateSignalsOf(corpus)
+      def ids(df: DataFrame): Set[Long] = df.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids(signals.filter(col("quality") >= 0.5)) ===
+        ids(DocOps.qualityScore(spark, dir).filter(col("quality") >= 0.5)))
+      assert(ids(signals.filter(col("pred_lang") =!= "und")) ===
+        ids(DocOps.langId(spark, dir).filter(col("pred_lang") =!= "und")))
+      assert(ids(signals.filter(col("bucket") < DocOps.sampleCut(Map("en" -> 0.25)))) ===
+        ids(DocOps.stratifiedSample(spark, dir, Map("en" -> 0.25))))
+    }
   }
 
   test("funnel stages all read the ONE persisted corpus frame, never the parquet") {
-    import org.apache.spark.sql.functions._
-    import graft.ops.DocOps
-    // the exact composition CurateCli.run uses: one persisted tokenized
-    // corpus, every stage derived from it — a FileSourceScan leaf in any
-    // stage plan would mean that stage re-scans (and re-tokenizes) the
-    // corpus behind the shared frame's back
-    val corpus = DocOps.curationFrame(spark, dir).persist()
-    try {
-      corpus.count() // materialize the one corpus read
-      val stagePlans = Map(
-        "exact_dedup" -> DocOps.exactDedupOf(corpus),
-        "priority_dedup" -> DocOps.priorityDedupOf(corpus),
-        "near_dup_pairs" -> DocOps.minhashLshPairsOf(corpus),
-        "decontaminate" -> DocOps.decontaminateOf(DocOps.shinglesOf(corpus), 20, 3),
-        "gate_signals" -> DocOps.gateSignalsOf(corpus),
-        "classifier_gate" -> DocOps.qualityClassifyOf(corpus, 4096),
-        "mixture_sample" -> DocOps.domainMixSampleOf(corpus,
-          DocOps.defaultMixWeights, DocOps.defaultBudgetFrac),
-        "boilerplate_strip" -> DocOps.strippedToksOf(corpus, 5),
-        "chunks" -> DocOps.chunkDocsOf(corpus, 50, 10))
-      // AdaptiveSparkPlanExec is itself a LeafExecNode — descend into its
-      // current plan or the leaf check never sees the real scans
-      def realLeaves(p: org.apache.spark.sql.execution.SparkPlan):
-          Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          realLeaves(a.executedPlan)
-        case l if l.children.isEmpty => Seq(l)
-        case n => n.children.flatMap(realLeaves)
-      }
-      stagePlans.foreach { case (name, df) =>
+    withFunnelFrames(dir) { (corpus, clusters) =>
+      // every document stage is a column of the verdict frame, and the
+      // chunks and the split read the persisted verdicts: no plan of the
+      // funnel may reach documents.parquet behind the shared frame's back
+      def assertCachedLeaves(name: String, df: DataFrame): Unit = {
         val leaves = realLeaves(df.queryExecution.executedPlan)
-        val fileScans = leaves.filterNot(
-          _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec])
+        val fileScans = leaves.filterNot(_.isInstanceOf[InMemoryTableScanExec])
         assert(leaves.nonEmpty && fileScans.isEmpty,
-          s"stage $name must read the cached corpus, found non-cache leaves: $fileScans")
+          s"$name must read cached frames only, found non-cache leaves: $fileScans")
       }
-      // the shared-frame stages return the SAME rows as the standalone
-      // (scan-direct, DuckDB-oracled) operators
-      assert(DocOps.minhashLshPairsOf(corpus).collect().toSeq ===
-        DocOps.minhashLshPairs(spark, dir).collect().toSeq)
+      // planned before the persist below, which would turn it into a leaf
+      val verdict = CurateCli.verdicts(corpus, clusters, CurateConfig())
+      assertCachedLeaves("verdicts", verdict)
+      verdict.persist()
+      try {
+        val survivors = verdict.filter(col("passed") === 10)
+        assertCachedLeaves("chunks", DocOps.chunkDocsOf(survivors, 50, 10))
+        assertCachedLeaves("split",
+          DocOps.clusterSplitOf(survivors.select("doc_id"), clusters, 0.75))
+      } finally verdict.unpersist()
+      // d7 builds the cluster frame the verdicts read: its own plan reads
+      // the cached corpus too, and the shared-frame ops return the SAME
+      // rows as the standalone (scan-direct, DuckDB-oracled) operators
+      val d7Held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      try {
+        val pairs = DocOps.minhashLshPairsOf(corpus, persisted = d7Held)
+        assertCachedLeaves("near_dup_pairs", pairs)
+        assert(pairs.collect().toSeq === DocOps.minhashLshPairs(spark, dir).collect().toSeq)
+      } finally d7Held.foreach(_.unpersist())
       assert(DocOps.chunkDocsOf(corpus, 50, 10).collect().length ===
         DocOps.chunkDocs(spark, dir).collect().length)
-    } finally corpus.unpersist()
+    }
+  }
+
+  test("verdict funnel equals the sequential semi-join chain, on an edge corpus too") {
+    val edges = java.nio.file.Files.createTempDirectory("graft-curate-edges").toString
+    writeEdgeCorpus(edges)
+    val funnels = Seq(dir, edges).map { d =>
+      val out = java.nio.file.Files.createTempDirectory("graft-curate-diff").toString
+      val got = CurateCli.run(spark, d, out, CurateConfig())
+      val (want, survivors) = chainFunnel(d, CurateConfig())
+      assert(got === want, s"funnel over $d")
+      val split = spark.read.parquet(s"$out/split").collect().map(_.getLong(0)).sorted.toSeq
+      assert(split === survivors, s"survivors over $d")
+      got.toMap
+    }
+    // the edge corpus reaches every gate it was built for
+    val f = funnels(1)
+    assert(f("priority_dedup") < f("input"), s"cross-source copies: $f")
+    assert(f("exact_dedup") === f("priority_dedup"), s"d1 over the d24 survivors: $f")
+    assert(f("near_dedup") < f("exact_dedup"), s"near-dup cluster: $f")
+    assert(f("decontaminate") < f("near_dedup"), s"benchmark docs: $f")
+    assert(f("quality_gate") < f("decontaminate"), s"NULL-quality docs: $f")
+    assert(f("boilerplate_strip") < f("stratified_sample") && f("boilerplate_strip") > 0,
+      s"all-boilerplate docs: $f")
+  }
+
+  test("a bad config fails before any output directory is written") {
+    val out = java.nio.file.Files.createTempDirectory("graft-curate-bad").resolve("out")
+    Seq[() => CurateConfig](() => CurateConfig(trainFrac = 1.0),
+      () => CurateConfig(trainFrac = 0.0), () => CurateConfig(overlap = 50),
+      () => CurateConfig(overlap = -1), () => CurateConfig(sampleEn = 1.5),
+      () => CurateConfig(minQuality = Double.NaN), () => CurateConfig(stripDfCap = -1))
+      .foreach { cfg =>
+        intercept[IllegalArgumentException](CurateCli.run(spark, dir, out.toString, cfg()))
+      }
+    assert(!java.nio.file.Files.exists(out), "a rejected config must not write outputs")
+  }
+
+  test("CurateCli rejects unknown and incomplete flags with the usage") {
+    val ok = CurateCli.parseArgs(Array("--docs_dir", "d", "--out_dir", "o",
+      "--strip_df_cap", "7", "--train_frac", "0.5"))
+    assert(ok === Map("docs_dir" -> "d", "out_dir" -> "o", "strip_df_cap" -> "7",
+      "train_frac" -> "0.5"))
+    Seq(Array("--docs_dir", "d", "--min_qualty", "0.3"), Array("--docs_dir", "d", "--out_dir"),
+      Array("docs_dir", "d")).foreach { args =>
+      val e = intercept[IllegalArgumentException](CurateCli.parseArgs(args))
+      assert(e.getMessage.contains("--train_frac") && e.getMessage.contains("--strip_df_cap"),
+        e.getMessage)
+    }
   }
 
   test("gate signals survive zero-token docs (ANSI divide-by-zero guard)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // Spark 4 defaults ANSI mode ON: an unguarded ttr division would THROW
     // on a doc whose text has no word characters, killing the funnel
@@ -196,12 +327,12 @@ class CurateSpec extends SparkSpec {
     Seq((0L, "", "en"), (1L, "!!! ...", "en"), (2L, "a real document here", "en"))
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = graft.ops.DocOps.gateSignals(spark, tmp).collect()
+    val rows = DocOps.gateSignals(spark, tmp).collect()
       .map(r => r.getLong(0) -> Option(r.get(3))).toMap
     assert(rows(0L).isEmpty && rows(1L).isEmpty, "zero-token docs get NULL quality")
     assert(rows(2L).nonEmpty)
     // NULL quality fails any gate threshold instead of crashing the job
-    val kept = graft.ops.DocOps.gateSignals(spark, tmp)
+    val kept = DocOps.gateSignals(spark, tmp)
       .filter(col("quality") >= 0.0).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(2L))
   }
