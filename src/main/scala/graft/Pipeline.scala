@@ -15,9 +15,11 @@ final case class PipelineConfig(
       * repartitioned by conv_id, sorted within partitions and cached,
       * materialized at run() time (see KgPipeline.run). */
     persistIntermediates: Boolean = false,
-    /** Physical strategy for mention detection: true = tag DISTINCT texts
-      * then hash-join back (wins on duplicated corpora); false = tag every
-      * turn in place with zero shuffles (wins on mostly-unique corpora). */
+    /** Tag each distinct text once per task: true memoizes the tagger in a
+      * bounded per-task map (wins when repeats are spread across the
+      * corpus — tool banners, templates); false tags every turn. Both are
+      * the same zero-shuffle projection with the same output; the memo
+      * never dedupes across partitions. */
     dedupeTexts: Boolean = true,
     /** Ship the mention-provenance columns (start, end, form) through the
       * SHARED frame on fused runs. Off (default), the one wide shuffle and

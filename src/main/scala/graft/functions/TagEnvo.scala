@@ -35,22 +35,50 @@ import org.apache.spark.unsafe.types.UTF8String
  * small broadcast HANDLE with the plan (the automaton itself travels once
  * per executor via the broadcast, never per task), and codegen resolves
  * `.value` once per generated-class instance, not per row.
+ *
+ * Memo: `memo = true` tags each distinct text once per task. Codegen adds
+ * a bounded [[TagEnvoMemo]] to the generated class, so every partition
+ * has its own and no two threads share one: one per class and automaton
+ * (the JVM-global one, or an injected one keyed by its broadcast id), so
+ * the pushed-down filter and the projection share it. The interpreted
+ * path keeps one per expression instance, and `stateful` makes
+ * interpreted projections take a fresh copy. A hit returns the same
+ * immutable array the miss computed, so the output is identical to
+ * `memo = false`, whose generated code the flag leaves untouched.
  */
 case class TagEnvoMentions(child: Expression,
-    dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None)
+    dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None,
+    memo: Boolean = false)
   extends UnaryExpression {
 
   override def dataType: DataType = TagEnvoMentions.schema
   override def nullIntolerant: Boolean = true
+  override def stateful: Boolean = memo
 
   @transient private lazy val resolvedAutomaton: graft.dict.AhoCorasick =
     dict.map(_.value).getOrElse(TagEnvoMentions.automaton)
 
+  @transient private lazy val interpretedMemo: TagEnvoMemo =
+    new TagEnvoMemo(resolvedAutomaton)
+
   override protected def nullSafeEval(input: Any): Any =
-    TagEnvoMentions.evalWith(resolvedAutomaton, input.asInstanceOf[UTF8String])
+    if (memo) interpretedMemo.tag(input.asInstanceOf[UTF8String])
+    else TagEnvoMentions.evalWith(resolvedAutomaton, input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    dict match {
+    if (memo) {
+      // one memo per generated class and automaton: the non-empty filter
+      // pushed below the projection evaluates tag_envo a second time per
+      // row, and that call hits the memo the first one filled
+      val (memoTerm, ac) = dict match {
+        case None => ("tagEnvoMemo", "graft.functions.TagEnvoMentions.automaton()")
+        case Some(bc) =>
+          (s"tagEnvoMemo_b${bc.id}", s"(graft.dict.AhoCorasick) ${broadcastRef(ctx, bc)}.value()")
+      }
+      ctx.addImmutableStateIfNotExists("graft.functions.TagEnvoMemo", memoTerm,
+        v => s"$v = new graft.functions.TagEnvoMemo($ac);")
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $memoTerm.tag($c);")
+    } else dict match {
       case None =>
         nullSafeCodeGen(ctx, ev, c =>
           s"${ev.value} = graft.functions.TagEnvoMentions.evalText($c);")
@@ -62,6 +90,19 @@ case class TagEnvoMentions(child: Expression,
         nullSafeCodeGen(ctx, ev, c =>
           s"${ev.value} = graft.functions.TagEnvoMentions.evalWith($acTerm, $c);")
     }
+
+  /** The broadcast's slot in the generated class's references, added once
+    * per broadcast id: every tag_envo sharing a memo must emit the same
+    * init code (`addImmutableStateIfNotExists` asserts it). */
+  private def broadcastRef(ctx: CodegenContext,
+      bc: org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]): String = {
+    val found = ctx.references.indexWhere {
+      case b: org.apache.spark.broadcast.Broadcast[_] => b.id == bc.id
+      case _ => false
+    }
+    val slot = if (found >= 0) found else { ctx.references += bc; ctx.references.length - 1 }
+    s"((org.apache.spark.broadcast.Broadcast) references[$slot])"
+  }
 
   override protected def withNewChildInternal(newChild: Expression): TagEnvoMentions =
     copy(child = newChild)
@@ -103,6 +144,60 @@ object TagEnvoMentions {
     containsNull = false)
 }
 
+/** A bounded per-task memo of `tag_envo` results: each distinct text is
+  * tagged once while it stays in the map. Keys are copied out of the
+  * (reused) row buffer with `copy()` (`clone()` hands back the caller's
+  * array when the string spans all of it) and compared on their full
+  * bytes, so two different texts can never share a result. Each entry is
+  * charged an estimate of its heap: its key bytes, `EntryBytes` for the
+  * map node and the object and array headers, and `SpanBytes` per tagged
+  * span (the span row, its boxed fields, form string and serials/envos
+  * arrays); Spark's SizeEstimator puts an entry at about 224 bytes plus
+  * 290 per span, and TagEnvoExprSpec pins the charge at or above it. When the next text would pass `MaxEntries` texts or `MaxBytes`
+  * the map is cleared and refilled, which bounds its heap per running task
+  * (a text whose own charge passes `MaxBytes` is tagged but not kept). Not
+  * thread-safe: one instance per generated-class instance or per
+  * interpreted expression copy. */
+final class TagEnvoMemo(automaton: graft.dict.AhoCorasick,
+    maxEntries: Int, maxBytes: Long) {
+  def this(automaton: graft.dict.AhoCorasick) =
+    this(automaton, TagEnvoMemo.MaxEntries, TagEnvoMemo.MaxBytes)
+
+  private val map = new java.util.HashMap[UTF8String, ArrayData]()
+  private var charged = 0L
+
+  def tag(text: UTF8String): ArrayData = {
+    val hit = map.get(text)
+    if (hit != null) hit
+    else {
+      val tagged = TagEnvoMentions.evalWith(automaton, text)
+      val cost = TagEnvoMemo.cost(text, tagged)
+      if (cost <= maxBytes) {
+        if (map.size >= maxEntries || charged + cost > maxBytes) {
+          map.clear()
+          charged = 0L
+        }
+        map.put(text.copy(), tagged)
+        charged += cost
+      }
+      tagged
+    }
+  }
+
+  private[graft] def entries: Int = map.size
+  private[graft] def bytes: Long = charged
+}
+
+object TagEnvoMemo {
+  val MaxEntries: Int = 65536
+  val MaxBytes: Long = 16L << 20
+  val EntryBytes: Long = 256L
+  val SpanBytes: Long = 320L
+
+  private[graft] def cost(text: UTF8String, tagged: ArrayData): Long =
+    text.numBytes + EntryBytes + SpanBytes * tagged.numElements
+}
+
 object GraftFunctions {
   /** Column-API entry point. Deliberately does NOT register anything:
     * `call_function` resolves at ANALYSIS time against the session that owns
@@ -116,17 +211,23 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("tag_envo", c)
 
   /** Explicit-session variant: registers on the session that will analyze
-    * the plan, then calls. Use from code that owns the session handle. */
-  def tag_envo(spark: org.apache.spark.sql.SparkSession, c: Column): Column = {
+    * the plan, then calls. Use from code that owns the session handle.
+    * `memo` tags each distinct text once per task (see [[TagEnvoMemo]]). */
+  def tag_envo(spark: org.apache.spark.sql.SparkSession, c: Column,
+               memo: Boolean = false): Column = {
     register(spark)
-    org.apache.spark.sql.functions.call_function("tag_envo", c)
+    org.apache.spark.sql.functions.call_function(
+      if (memo) "tag_envo_memo" else "tag_envo", c)
   }
 
-  /** Register `tag_envo` + `vec_dot` + the IVF cell primitives for SQL use
-    * on an existing session. */
+  /** Register `tag_envo` (and its per-task memoized twin `tag_envo_memo`)
+    * + `vec_dot` + the IVF cell primitives for SQL use on an existing
+    * session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "tag_envo", exprs => TagEnvoMentions(exprs.head), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "tag_envo_memo", exprs => TagEnvoMentions(exprs.head, memo = true), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot", exprs => {
         require(exprs.length == 2, s"vec_dot takes 2 arguments, got ${exprs.length}")
@@ -176,13 +277,14 @@ object GraftFunctions {
   /** Column-API tagger with an INJECTED dictionary automaton: registers a
     * per-broadcast function name (`tag_envo_b<id>` — broadcast ids are
     * session-unique, so concurrent pipelines with different dictionaries
-    * never collide) whose factory closes over the broadcast handle. */
+    * never collide) whose factory closes over the broadcast handle.
+    * `memo` as in [[tag_envo]] (registered as `tag_envo_memo_b<id>`). */
   def tag_envo_with(spark: org.apache.spark.sql.SparkSession,
                     dict: org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick],
-                    c: Column): Column = {
-    val name = s"tag_envo_b${dict.id}"
+                    c: Column, memo: Boolean = false): Column = {
+    val name = s"tag_envo${if (memo) "_memo" else ""}_b${dict.id}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TagEnvoMentions(exprs.head, Some(dict)), "built-in")
+      name, exprs => TagEnvoMentions(exprs.head, Some(dict), memo), "built-in")
     org.apache.spark.sql.functions.call_function(name, c)
   }
 }

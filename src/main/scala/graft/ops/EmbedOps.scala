@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
  * sign-buckets — at 100 TB the brute-force cross join is quadratic and
  * infeasible, the LSH join shuffles on the bucket key only).
  *
- * All math uses built-in higher-order functions (zip_with + aggregate):
- * codegen'd, no UDF, left-to-right fold order so the DuckDB oracle (same
- * fold order, same double casts) is bit-identical.
+ * Every dot product is the native codegen'd `vec_dot` expression: no UDF,
+ * a left-to-right double fold so the DuckDB oracle (same fold order, same
+ * double casts) is bit-identical.
  */
 object EmbedOps {
 
@@ -36,12 +36,6 @@ object EmbedOps {
   private[graft] def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.vec_dot(a, b)
 
-  /** The replaced HOF shape, kept for the parity test only. */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** cosine from PRE-COMPUTED norm scalar columns, NULL for zero vectors.
@@ -49,16 +43,15 @@ object EmbedOps {
     * where 0/0 THROWS — one all-zero embedding in a 100 TB corpus must
     * score NULL (failing every threshold/rank filter), not kill the job;
     * (2) norms computed once per VECTOR in the side frames instead of once
-    * per PAIR inside the join cut the HOF passes from O(pairs) to O(rows)
-    * (zip_with/aggregate are interpreted — see litDot's note). NULL ranks
-    * after every real cosine (Spark default NULLS LAST on DESC). */
+    * per PAIR inside the join cut the dot passes from O(pairs) to O(rows).
+    * NULL ranks after every real cosine (Spark default NULLS LAST on DESC). */
   private[graft] def cosineFromNorms(dotCol: Column, na: Column, nb: Column): Column =
     when(na > 0 && nb > 0, dotCol / (na * nb))
 
   /** dot(vec, literal constant vector): the constant side is a literal
-    * array (computed once on the driver), folded with the same zip_with +
-    * aggregate shape as `dot`. (An unrolled sum of 64 element_at terms was
-    * tried and measured ~3x SLOWER — with 32 dots per row the generated
+    * array (computed once on the driver), folded by the same `dot`. (An
+    * unrolled sum of 64 element_at terms was tried and measured ~3x
+    * SLOWER — with 32 dots per row the generated
     * expression tree exceeds codegen/JIT limits and falls back to
     * interpreted eval of a 2048-node tree.) */
   private def litDot(vec: Column, comps: Array[Double]): Column =

@@ -7,36 +7,34 @@ import org.apache.spark.sql.functions._
  * Stage 1 — dictionary mention detection over per-turn text.
  *
  * The Spark-first recast of the reference's tagger stage
- * (seqenv/data_sources/add_tagger_results.py:114-134): the single biggest
- * physical lever is its *dedupe-before-expensive-op* pattern — tag only
- * DISTINCT texts, then join results back to the turns that carry them.
- * Transcript corpora repeat text heavily (tool banners, templates), so at
- * 10^12 turns this cuts automaton work by the duplication factor while the
- * join-back stays a plain shuffled equi-join on a 64-bit text hash that AQE
- * can downgrade to broadcast when the distinct set is small.
+ * (seqenv/data_sources/add_tagger_results.py:114-134), which tags each
+ * DISTINCT text once. Here that dedupe happens inside the task, not across
+ * the cluster: the tagger is one shuffle-free projection over the turns,
+ * and `dedupeTexts` only turns on the tagger's bounded per-task memo (see
+ * [[graft.functions.TagEnvoMemo]]). A global distinct plus join-back would
+ * cost two text-carrying shuffles to save tagging that runs at about a
+ * million short texts per second per core.
  *
  * The automaton (≈6.5k patterns) is a JVM-global built from bundled
  * resources on first use per executor and evaluated via the native
  * TagEnvoMentions Catalyst expression — compute-bound, embarrassingly
- * parallel, no skew (texts are hash-distributed regardless of conversation
- * size), no broadcast or Dataset-encoder round trip.
+ * parallel over the input's own partitions, no broadcast or
+ * Dataset-encoder round trip.
  */
 object MentionDetect {
 
   /** turns(conv_id, turn_idx, role, text, tool, ts)
     *   -> (conv_id, turn_idx, tool, text_hash, mentions: array<struct>)
-    * Only turns with ≥1 mention survive (inner join + non-empty filter),
-    * matching the reference's "GIs with envo" restriction
-    * (seqenv/analysis.py:333-336).
+    * Only turns with ≥1 mention survive (non-empty filter), matching the
+    * reference's "GIs with envo" restriction (seqenv/analysis.py:333-336).
     *
-    * Two physical strategies, same result:
-    *  - distinct-text rewrite (default): tag each DISTINCT text once, join
-    *    back on a 64-bit hash — wins when the corpus repeats text heavily
-    *    (tool banners, templates; the reference's own J4/A8 pattern);
-    *  - direct: tag every turn in place — ZERO shuffles, wins when texts
-    *    are mostly unique (tagging at 29 MB/s/core is cheaper than
-    *    shuffling the text bytes twice).
-    * At 100 TB pick per-corpus via `dedupeTexts`; both scale linearly.
+    * `dedupeTexts = true` (default) memoizes the tagger per task: a text
+    * repeated within a partition is tagged once while it stays in the
+    * bounded memo. It wins when repeats are spread across the corpus
+    * (tool banners, templates); it dedupes only within a task, never
+    * across partitions, and it compares full text bytes, so it can never
+    * pair two different texts. `false` tags every turn with no memo.
+    * Both are the same zero-shuffle projection with the same output.
     *
     * `dict`: an optional broadcast automaton to tag with INSTEAD of the
     * JVM-global bundled dictionary — the injectable-dictionary path that
@@ -44,49 +42,21 @@ object MentionDetect {
     * (tests, the restricted-dictionary driver gate, domain dictionaries). */
   def detect(spark: SparkSession, turns: DataFrame,
              dedupeTexts: Boolean = true,
-             dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None): DataFrame =
-    if (dedupeTexts) detectDistinct(spark, turns, dict)
-    else detectDirect(spark, turns, dict)
-
-  // Both strategies evaluate the native TagEnvoMentions Catalyst expression
-  // inside a plain projection — no Dataset Encoder round trip, and the
-  // tagger composes with whatever else the projection computes.
-
-  private def tagExpr(spark: SparkSession,
-      dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]],
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    dict match {
-      case Some(bc) => graft.functions.GraftFunctions.tag_envo_with(spark, bc, c)
-      case None => graft.functions.GraftFunctions.tag_envo(spark, c)
+             dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None): DataFrame = {
+    // the native TagEnvoMentions Catalyst expression inside a plain
+    // projection — no Dataset Encoder round trip, and the tagger composes
+    // with whatever else the projection computes
+    val mentions = dict match {
+      case Some(bc) =>
+        graft.functions.GraftFunctions.tag_envo_with(spark, bc, col("text"), memo = dedupeTexts)
+      case None =>
+        graft.functions.GraftFunctions.tag_envo(spark, col("text"), memo = dedupeTexts)
     }
-
-  private def detectDistinct(spark: SparkSession, turns: DataFrame,
-      dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]]): DataFrame = {
-    val withHash = turns.withColumn("text_hash", xxhash64(col("text")))
-    // Tag each DISTINCT text exactly once. The join-back keys on
-    // (hash, text): the hash narrows comparisons, the text equality makes
-    // a 64-bit collision harmless (at 10^12 distinct texts a hash-only
-    // join has non-negligible odds of pairing two different texts).
-    val tagged: DataFrame = withHash
-      .select(col("text_hash"), col("text"))
-      .dropDuplicates("text_hash", "text")
-      .select(col("text_hash"), col("text"),
-        tagExpr(spark, dict, col("text")).as("mentions"))
-      .filter(size(col("mentions")) > 0)
-    withHash
-      .join(tagged, Seq("text_hash", "text"))
-      .select(
-        col("conv_id"), col("turn_idx"), col("tool"),
-        col("text_hash"), col("mentions"))
-  }
-
-  private def detectDirect(spark: SparkSession, turns: DataFrame,
-      dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]]): DataFrame =
     turns
       .select(col("conv_id"), col("turn_idx"), col("tool"),
-        xxhash64(col("text")).as("text_hash"),
-        tagExpr(spark, dict, col("text")).as("mentions"))
+        xxhash64(col("text")).as("text_hash"), mentions.as("mentions"))
       .filter(size(col("mentions")) > 0)
+  }
 
   /** Flatten to one row per mention (for the `mentions` triple sink and
     * evidence tables). */

@@ -6,7 +6,9 @@ import graft.synth.TranscriptGen
 
 /** Per-stage wall-clock profile of the KG pipeline at a given core count.
   * Usage: ProfileKg <turnsParquet> <cores> [direct] [sp=N]
-  *   [explain | jobs [warm]] [pq] */
+  *   [explain | jobs [warm]] [pq]
+  * `direct` profiles mention detection without the per-task tagger memo
+  * (dedupeTexts = false); the default memoizes it. */
 object ProfileKg {
   def main(args: Array[String]): Unit = {
     val path = args(0)

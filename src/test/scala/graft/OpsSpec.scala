@@ -514,39 +514,45 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("vec_dot expression == the interpreted HOF fold, bit-for-bit") {
+  test("vec_dot expression == a plain Scala left fold, bit-for-bit") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // the native expression replaced zip_with+aggregate in every cosine
-    // path on a bit-parity contract — pin it on real float data, on a
-    // double literal side, and on the NULL/mismatch edge cases
+    // path on a bit-parity contract: a left fold in double from 0.0, NULL
+    // when an element is NULL or the lengths differ. Pin it against that
+    // fold in plain Scala on real float data, on a double literal side,
+    // and on the NULL/mismatch edge cases
+    def fold(a: Seq[Any], b: Seq[Any]): Option[Double] =
+      if (a.length != b.length || a.contains(null) || b.contains(null)) None
+      else Some(a.zip(b).foldLeft(0.0) { case (acc, (x, y)) =>
+        acc + x.asInstanceOf[Number].doubleValue * y.asInstanceOf[Number].doubleValue })
+    def same(native: Double, ref: Option[Double], what: String): Unit =
+      assert(ref.exists(d => java.lang.Double.doubleToLongBits(d) ==
+        java.lang.Double.doubleToLongBits(native)), s"$what: $native vs $ref")
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val both = e.select(
-      graft.ops.EmbedOps.dot(col("embedding"), col("embedding")).as("native"),
-      graft.ops.EmbedOps.dotHof(col("embedding"), col("embedding")).as("hof"))
+    val both = e.select(col("embedding"),
+      graft.ops.EmbedOps.dot(col("embedding"), col("embedding")).as("native"))
       .collect()
     assert(both.nonEmpty)
-    both.foreach(r => assert(
-      java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), "float-side parity"))
+    both.foreach { r =>
+      val v = r.getSeq[Any](0)
+      same(r.getDouble(1), fold(v, v), "float-side parity")
+    }
     val lits = Array.tabulate(64)(i => (i % 7).toDouble / 3.0 - 1.0)
-    val withLit = e.select(
-      graft.ops.EmbedOps.dot(col("embedding"), typedlit(lits.toSeq)).as("native"),
-      graft.ops.EmbedOps.dotHof(col("embedding"), typedlit(lits.toSeq)).as("hof"))
+    val withLit = e.select(col("embedding"),
+      graft.ops.EmbedOps.dot(col("embedding"), typedlit(lits.toSeq)).as("native"))
       .collect()
-    withLit.foreach(r => assert(
-      java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), "literal-side parity"))
-    // NULL element and length-mismatch both yield NULL, like the HOF shape
+    withLit.foreach(r => same(r.getDouble(1), fold(r.getSeq[Any](0), lits.toSeq),
+      "literal-side parity"))
+    // NULL element and length-mismatch both yield NULL, like the fold
     val edge = Seq(
       (Seq[java.lang.Float](1f, null, 3f), Seq[java.lang.Float](1f, 2f, 3f)),
       (Seq[java.lang.Float](1f, 2f), Seq[java.lang.Float](1f, 2f, 3f)))
-      .toDF("a", "b")
-      .select(graft.ops.EmbedOps.dot(col("a"), col("b")).as("native"),
-        graft.ops.EmbedOps.dotHof(col("a"), col("b")).as("hof"))
+    val native = edge.toDF("a", "b")
+      .select(graft.ops.EmbedOps.dot(col("a"), col("b")).as("native"))
       .collect()
-    edge.foreach { r =>
-      assert(r.isNullAt(0) && r.isNullAt(1), s"edge rows must be NULL on both: $r")
+    native.zip(edge).foreach { case (r, (a, b)) =>
+      assert(r.isNullAt(0) && fold(a, b).isEmpty, s"edge rows must be NULL on both: $r")
     }
   }
 

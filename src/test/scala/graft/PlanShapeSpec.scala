@@ -308,29 +308,94 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("mention detect direct path has no shuffle before the tagger") {
+    // both settings of dedupeTexts are one projection: the memoized tagger
+    // dedupes inside the task, never by a distinct + join-back
     val turns = graft.synth.TranscriptGen.generate(spark, 10).toDF
-    val p = plan(graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false))
-    assert(!p.contains("Exchange"), s"direct tagging must be shuffle-free:\n$p")
+    for (dedupe <- Seq(false, true)) {
+      val p = plan(graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = dedupe))
+      assert(!p.contains("Exchange"), s"dedupeTexts=$dedupe tagging must be shuffle-free:\n$p")
+      assert(!p.contains("Join"), s"dedupeTexts=$dedupe tagging must be join-free:\n$p")
+    }
+  }
+
+  /** The optimizer pushes the non-empty filter below the tagging
+    * projection, so tag_envo is generated twice per stage; a memoized
+    * stage must share ONE memo between the two calls (the second call per
+    * row then hits) and a plain stage must have none. */
+  private def assertMemos(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
+    val code = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+    assert("\\.tag\\(|evalText\\(|evalWith\\(".r.findAllIn(code).length === 2,
+      s"tag_envo must be generated in the filter and the projection:\n$code")
+    assert("new graft\\.functions\\.TagEnvoMemo\\(".r.findAllIn(code).length === n,
+      s"expected $n memo(s) in the generated code:\n$code")
   }
 
   test("tag_envo expression is whole-stage-codegen'd, not a fallback") {
     // fallback=false makes Janino compilation failures THROW instead of
     // silently demoting the stage to interpreted eval — this pins that the
-    // doGenCode static-call path really compiles and runs
+    // doGenCode paths (plain static call, and the per-instance memo that
+    // dedupeTexts turns on) really compile and run
     val turns = graft.synth.TranscriptGen.generate(spark, 20).toDF
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val detected = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)
-      assert(detected.count() > 0)
-      // the tagging projection must sit INSIDE a WholeStageCodegen span —
-      // under CodegenFallback it would be hoisted out of every span
-      val spans = detected.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("tag_envo") => w
+      for (dedupe <- Seq(false, true)) {
+        val detected = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = dedupe)
+        assert(detected.count() > 0)
+        // the tagging projection must sit INSIDE a WholeStageCodegen span —
+        // under CodegenFallback it would be hoisted out of every span
+        val spans = detected.queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+            if w.toString.contains("tag_envo") => w
+        }
+        assert(spans.nonEmpty, s"dedupeTexts=$dedupe: tag_envo must be fused into a " +
+          s"codegen span:\n${detected.queryExecution.executedPlan}")
+        assertMemos(detected, if (dedupe) 1 else 0)
       }
-      assert(spans.nonEmpty,
-        s"tag_envo must be fused into a codegen span:\n${detected.queryExecution.executedPlan}")
     } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("upui + backtracking partcache holds the build's only shuffle: hashpartitioning(conv_id)") {
+    // dedupeTexts (the default) tags in the task, so the conv_id
+    // repartition that builds the partcache is the one wide shuffle of an
+    // un-checkpointed build: no text_hash exchange, no join below it
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec => Seq(s)
+      case n => n +: n.children.flatMap(walk)
+    }
+    val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
+    val cfg = graft.stages.ScoreConfig("upui", proportional = true, backtracking = true)
+    val r = new KgPipeline(spark, PipelineConfig(score = cfg, persistIntermediates = true,
+      dedupeTexts = true)).run(turns)
+    try {
+      val scorer = walk(r.scores.queryExecution.executedPlan).collectFirst {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }.getOrElse(fail("scores must be persisted on a persistIntermediates run"))
+      val partcache = walk(scorer).collectFirst {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }.getOrElse(fail(s"the scorer must read the partcache:\n$scorer"))
+      val nodes = walk(partcache)
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length === 1, s"one exchange builds the partcache:\n$partcache")
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.flatMap(_.references.map(_.name)).distinct === Seq("conv_id"),
+            s"the partcache shuffles on conv_id only:\n$partcache")
+        case other => fail(s"the partcache exchange must hash conv_id, got $other")
+      }
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
+        s"no join-back below the partcache:\n$partcache")
+    } finally {
+      r.unpersist()
+      spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("vec_dot is whole-stage-codegen'd, not a fallback") {
@@ -476,25 +541,28 @@ class PlanShapeSpec extends SparkSpec {
 
   test("injected-dictionary tag_envo is also whole-stage-codegen'd") {
     // the broadcast-handle path generates different code (mutable-state
-    // automaton resolved from the broadcast once per generated instance) —
-    // pin that it, too, compiles under fallback=false and fuses
+    // automaton or memo resolved from the broadcast once per generated
+    // instance) — pin that it, too, compiles under fallback=false and fuses
     val turns = graft.synth.TranscriptGen.generate(spark, 20).toDF
     val bc = spark.sparkContext.broadcast(KgPipeline.sharedAutomaton)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val detected = graft.stages.MentionDetect.detect(
-        spark, turns, dedupeTexts = false, dict = Some(bc))
-      assert(detected.count() > 0)
-      val spans = detected.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("tag_envo") => w
-      }
-      assert(spans.nonEmpty,
-        s"injected tag_envo must fuse:\n${detected.queryExecution.executedPlan}")
-      // same automaton -> same mentions as the default path
       val viaDefault = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)
         .select("conv_id", "turn_idx").collect().map(_.toSeq).toSet
-      assert(detected.select("conv_id", "turn_idx").collect().map(_.toSeq).toSet === viaDefault)
+      for (dedupe <- Seq(false, true)) {
+        val detected = graft.stages.MentionDetect.detect(
+          spark, turns, dedupeTexts = dedupe, dict = Some(bc))
+        assert(detected.count() > 0)
+        val spans = detected.queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+            if w.toString.contains("tag_envo") => w
+        }
+        assert(spans.nonEmpty, s"dedupeTexts=$dedupe: injected tag_envo must " +
+          s"fuse:\n${detected.queryExecution.executedPlan}")
+        assertMemos(detected, if (dedupe) 1 else 0)
+        // same automaton -> same mentions as the default path
+        assert(detected.select("conv_id", "turn_idx").collect().map(_.toSeq).toSet === viaDefault)
+      }
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

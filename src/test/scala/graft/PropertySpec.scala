@@ -46,6 +46,8 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // `dedupeTexts = true` is the per-task memoized tagger (the in-task
+  // form of the reference's distinct-text rewrite); `false` tags every turn
   test("physical-strategy invariance: distinct-rewrite and direct tagging agree") {
     val t = turnsDf(21L, 50)
     def rows(df: DataFrame) = MentionDetect.explodeMentions(df)
