@@ -9,17 +9,11 @@ final case class PipelineConfig(
     score: ScoreConfig = ScoreConfig(),
     checkpointDir: Option[String] = None,
     evidenceCap: Int = 20,
-    /** Persist the mention/score stages (MEMORY_AND_DISK) — set when more
-      * than one output sink will be materialized, so the tagger and scorer
-      * run once instead of once per sink. The envo-row projection is then
-      * repartitioned by conv_id, sorted within partitions and cached,
-      * materialized at run() time (see KgPipeline.run). */
-    persistIntermediates: Boolean = false,
-    /** Tag each distinct text once per task: true memoizes the tagger in a
-      * bounded per-task map (wins when repeats are spread across the
-      * corpus — tool banners, templates); false tags every turn. Both are
-      * the same zero-shuffle projection with the same output; the memo
-      * never dedupes across partitions. */
+    /** Ignored; deleted once the benchmark stops passing it. */
+    @deprecated("ignored: run() always persists its shared stages", "0.1.0")
+    persistIntermediates: Boolean = true,
+    /** Ignored; deleted once the benchmark stops passing it. */
+    @deprecated("ignored: the tagger always memoizes per task", "0.1.0")
     dedupeTexts: Boolean = true,
     /** Ship the mention-provenance columns (start, end, form) through the
       * SHARED frame on fused runs. Off (default), the one wide shuffle and
@@ -35,12 +29,12 @@ final case class PipelineConfig(
       * covers it. Non-fused runs always carry the full projection. */
     mentionProvenance: Boolean = false)
 
-/** All pipeline outputs. The frames are lazy DataFrames (the reference's
-  * pulled property-DAG, seqenv/analysis.py:148-159 via
-  * seqenv/common/cache.py) — except that `persistIntermediates` runs
-  * materialize the SHARED intermediates at run() time, so that their
-  * cached partitioning is visible when the sink queries are planned
-  * (see KgPipeline.run). */
+/** All pipeline outputs. The sink frames are lazy DataFrames (the
+  * reference's pulled property-DAG, seqenv/analysis.py:148-159 via
+  * seqenv/common/cache.py) over SHARED intermediates that run()
+  * persists and materializes, so that their cached partitioning is visible
+  * when the sink queries are planned (see KgPipeline.run). Release them
+  * with [[KgResult.unpersist]]. */
 final case class KgResult(
     turnMentions: DataFrame,   // (conv_id, turn_idx, tool, text_hash, mentions)
     mentionRows: DataFrame,    // flattened per-mention rows
@@ -72,10 +66,10 @@ final case class KgResult(
   private[graft] def mentionTriplesUnionForTest: DataFrame =
     mentionTriplesForUnion.getOrElse(mentionTriples)
 
-  /** Release the shared caches run() created (persistIntermediates runs
-    * only). Call after the sinks are written: a long-lived session
-    * composing many pipelines would otherwise accumulate one envoRows +
-    * one scores/fused cache per run until teardown. */
+  /** Release the shared caches run() created. Call after the sinks are
+    * written: a long-lived session composing many pipelines would
+    * otherwise accumulate one envoRows + one scores/fused cache per run
+    * until teardown. */
   def unpersist(): Unit = sharedFrames.foreach(_.unpersist())
 }
 
@@ -83,7 +77,7 @@ final case class KgResult(
  * The transcript→EnvO KG builder. One dictionary + automaton per pipeline
  * instance, broadcast once per SparkSession.
  *
- * Dataflow: turns → MentionDetect (distinct-text tagger) → LinkScore
+ * Dataflow: turns → MentionDetect (per-task memoized tagger) → LinkScore
  * (flat/ui/upui × proportional × backtracking × restrict) → Canonicalize →
  * TripleEmit (+ co-occurrence edges), each stage optionally checkpointed
  * with a lineage manifest for resume.
@@ -143,7 +137,7 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
       val dictKey = dictOverride
         .map(d => s"dict:${d.contentDigest}")
         .getOrElse("dict:shared")
-      val key = s"$planKey|${cfg.score}|${cfg.evidenceCap}|${cfg.dedupeTexts}|$dictKey"
+      val key = s"$planKey|${cfg.score}|${cfg.evidenceCap}|$dictKey"
       java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8")).toString
     }
 
@@ -152,7 +146,7 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     val fp = fingerprint(turns)
 
     val turnMentions0 = Checkpoint.stage(spark, ckpt, "mentions", fp) {
-      MentionDetect.detect(spark, turns, cfg.dedupeTexts, dictBc)
+      MentionDetect.detect(spark, turns, dict = dictBc)
     }
     // the hot intermediate is the FLAT envo-occurrence projection — all
     // primitive columns, so the columnar cache build stays cheap (caching
@@ -209,19 +203,14 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     // near-free. SortExec preserves the HashPartitioning(conv_id) the
     // consumers plan against, and the sorted cache also satisfies the
     // window's required child ordering (conv_id prefix), eliding that sort.
-    val envoRows =
-      if (!cfg.persistIntermediates) envoRows0
-      else {
-        val cached = share(envoRows0
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            org.apache.spark.sql.functions.col("conv_id"))
-          .sortWithinPartitions(
-            org.apache.spark.sql.functions.col("conv_id"),
-            org.apache.spark.sql.functions.col("turn_idx"))
-          .persist(disk))
-        cached.count()
-        cached
-      }
+    val envoRows = share(envoRows0
+      .repartition(spark.sessionState.conf.numShufflePartitions,
+        org.apache.spark.sql.functions.col("conv_id"))
+      .sortWithinPartitions(
+        org.apache.spark.sql.functions.col("conv_id"),
+        org.apache.spark.sql.functions.col("turn_idx"))
+      .persist(disk))
+    envoRows.count()
     val mentionRows = MentionDetect.explodeMentions(turnMentions0)
 
     // Fused path (flat scoring): ONE aggregation yields score + evidence
@@ -230,15 +219,14 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     // scores are projections of it.
     val fused: Option[DataFrame] =
       if (fusedApplies) {
-        val f0 = Checkpoint.stage(spark, ckpt, "fused", fp) {
+        val f = share(Checkpoint.stage(spark, ckpt, "fused", fp) {
           LinkScore.scoreWithEvidence(spark, envoRows, cfg.score, cfg.evidenceCap)
-        }
-        val f = if (cfg.persistIntermediates) share(f0.persist(disk)) else f0
+        }.persist(disk))
         // same materialize-before-plan reasoning: the co-occurrence
         // self-join goes exchange-free only when the cached fused frame's
         // conv_id partitioning is visible at planning time (the window
         // leaves it conv_id-partitioned)
-        if (cfg.persistIntermediates) f.count()
+        f.count()
         Some(f)
       } else None
 
@@ -248,11 +236,9 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
           org.apache.spark.sql.functions.col("envo"),
           org.apache.spark.sql.functions.col("score"))
       case None =>
-        val scores0 = Checkpoint.stage(spark, ckpt, "scores", fp) {
+        share(Checkpoint.stage(spark, ckpt, "scores", fp) {
           LinkScore.score(spark, envoRows, dict, cfg.score)
-        }
-        if (cfg.persistIntermediates) share(scores0.persist(disk))
-        else scores0
+        }.persist(disk))
     }
 
     val annotated = fused match {

@@ -295,9 +295,9 @@ object SparkEntry {
         colValues = (0 until 50).map(_.toString))
     }),
     // O10 — the COMPOSED pipeline under the gate: not a hand-wired stage
-    // chain but the production `KgPipeline(...).run(...)` itself (distinct-
-    // text tagging + join-back, envoRows sharing across branches,
-    // persistIntermediates, canonicalization) with the restricted dictionary
+    // chain but the production `KgPipeline(...).run(...)` itself (per-task
+    // memoized tagging, the persisted conv_id partcache shared across
+    // branches, canonicalization) with the restricted dictionary
     // INJECTED as a broadcast automaton. Input: documents reshaped into the
     // o4-style 50 synthetic conversations (conv = doc_id % 50, turn =
     // doc_id) as real Turn-shaped rows, text injected as in o1. Flat +
@@ -362,8 +362,7 @@ object SparkEntry {
       new KgPipeline(s,
           PipelineConfig(
             score = graft.stages.ScoreConfig(normalization = "upui",
-              proportional = true, backtracking = true),
-            persistIntermediates = true),
+              proportional = true, backtracking = true)),
           dictOverride = Some(restrictedDict))
         .run(turns)
         .annotated
@@ -381,22 +380,20 @@ object SparkEntry {
     "e7_sq_topk" -> ((s, d) => EmbedOps.sqTopK(s, d)),
     "e8_ivf_sq_topk" -> ((s, d) => EmbedOps.ivfSqTopK(s, d)),
     // --- KG pipeline (rows-only for the driver; oracled by ScalaTest).
-    //     persistIntermediates: the triple queries consume the tagger
-    //     output through several plan branches — cache it once. ---
+    //     run() caches the tagger output once for every plan branch. ---
     "kg_annotated_triples" -> ((s, _) =>
-      new KgPipeline(s, PipelineConfig(persistIntermediates = true)).run(kgTurns(s)).annotated
+      new KgPipeline(s).run(kgTurns(s)).annotated
         .select("subj", "pred", "obj", "weight", "evidence").orderBy("subj", "obj")),
     "kg_mention_triples" -> ((s, _) =>
-      new KgPipeline(s, PipelineConfig(persistIntermediates = true)).run(kgTurns(s)).mentionTriples
+      new KgPipeline(s).run(kgTurns(s)).mentionTriples
         .select("subj", "pred", "obj", "form", "start", "end").orderBy("subj", "obj", "start")),
     "kg_cooccurrence" -> ((s, _) =>
-      new KgPipeline(s, PipelineConfig(persistIntermediates = true)).run(kgTurns(s)).coOccurrence
+      new KgPipeline(s).run(kgTurns(s)).coOccurrence
         .orderBy("envo_a", "envo_b")),
     "kg_sample_projection" -> ((s, _) => {
       // scores × deterministic abundance → concept×sample projection (J6)
       import org.apache.spark.sql.functions._
-      val scores = new KgPipeline(s, PipelineConfig(persistIntermediates = true))
-        .run(kgTurns(s)).scores
+      val scores = new KgPipeline(s).run(kgTurns(s)).scores
       val abundance = scores.select(col("conv_id").as("otu")).distinct()
         .withColumn("s", explode(array(lit("s1"), lit("s2"), lit("s3"))))
         .select(col("otu"), col("s").as("sample"),
@@ -592,8 +589,7 @@ object SparkEntry {
 
   private def restrictedConfig: PipelineConfig =
     PipelineConfig(
-      score = graft.stages.ScoreConfig(normalization = "flat", proportional = true),
-      persistIntermediates = true)
+      score = graft.stages.ScoreConfig(normalization = "flat", proportional = true))
 
   private def restrictedPipeline(s: SparkSession, d: String): KgResult =
     new KgPipeline(s, restrictedConfig, dictOverride = Some(restrictedDict))

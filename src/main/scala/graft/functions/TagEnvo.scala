@@ -21,12 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * executor), so the expression serializes as a plain tree node with no
  * broadcast dependency.
  *
- * Codegen: `doGenCode` emits a single static call into [[TagEnvoMentions
- * .evalText]] (Scala's companion static forwarder), so the projection that
- * hosts the tagger stays inside WholeStageCodegen — a CodegenFallback here
- * would demote the WHOLE stage (scan-side projection + the non-empty
- * mention filter) to interpreted Volcano iteration, taxing everything
- * fused around the tagger, not just the tagger itself.
+ * Codegen: `doGenCode` keeps the tagger inside WholeStageCodegen — a
+ * CodegenFallback here would demote the WHOLE stage (scan-side projection
+ * + the non-empty mention filter) to interpreted Volcano iteration,
+ * taxing everything fused around the tagger, not just the tagger itself.
  *
  * Dictionary injection: `dict = None` (the default, and the only shape the
  * SQL-registered `tag_envo` produces) uses the JVM-global automaton built
@@ -36,60 +34,43 @@ import org.apache.spark.unsafe.types.UTF8String
  * per executor via the broadcast, never per task), and codegen resolves
  * `.value` once per generated-class instance, not per row.
  *
- * Memo: `memo = true` tags each distinct text once per task. Codegen adds
- * a bounded [[TagEnvoMemo]] to the generated class, so every partition
- * has its own and no two threads share one: one per class and automaton
- * (the JVM-global one, or an injected one keyed by its broadcast id), so
- * the pushed-down filter and the projection share it. The interpreted
- * path keeps one per expression instance, and `stateful` makes
- * interpreted projections take a fresh copy. A hit returns the same
- * immutable array the miss computed, so the output is identical to
- * `memo = false`, whose generated code the flag leaves untouched.
+ * Memo: each distinct text is tagged once per task, as the reference tags
+ * each distinct text once (add_tagger_results.py:114-134). Codegen adds a
+ * bounded [[TagEnvoMemo]] to the generated class, so every partition has
+ * its own and no two threads share one: one per class and automaton (the
+ * JVM-global one, or an injected one keyed by its broadcast id), so the
+ * pushed-down filter and the projection share it. The interpreted path
+ * keeps one per expression instance, and `stateful` makes interpreted
+ * projections take a fresh copy. A hit returns the same immutable array
+ * the miss computed, so the output is that of [[TagEnvoMentions.evalWith]].
  */
 case class TagEnvoMentions(child: Expression,
-    dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None,
-    memo: Boolean = false)
+    dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None)
   extends UnaryExpression {
 
   override def dataType: DataType = TagEnvoMentions.schema
   override def nullIntolerant: Boolean = true
-  override def stateful: Boolean = memo
-
-  @transient private lazy val resolvedAutomaton: graft.dict.AhoCorasick =
-    dict.map(_.value).getOrElse(TagEnvoMentions.automaton)
+  override def stateful: Boolean = true
 
   @transient private lazy val interpretedMemo: TagEnvoMemo =
-    new TagEnvoMemo(resolvedAutomaton)
+    new TagEnvoMemo(dict.map(_.value).getOrElse(TagEnvoMentions.automaton))
 
   override protected def nullSafeEval(input: Any): Any =
-    if (memo) interpretedMemo.tag(input.asInstanceOf[UTF8String])
-    else TagEnvoMentions.evalWith(resolvedAutomaton, input.asInstanceOf[UTF8String])
+    interpretedMemo.tag(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (memo) {
-      // one memo per generated class and automaton: the non-empty filter
-      // pushed below the projection evaluates tag_envo a second time per
-      // row, and that call hits the memo the first one filled
-      val (memoTerm, ac) = dict match {
-        case None => ("tagEnvoMemo", "graft.functions.TagEnvoMentions.automaton()")
-        case Some(bc) =>
-          (s"tagEnvoMemo_b${bc.id}", s"(graft.dict.AhoCorasick) ${broadcastRef(ctx, bc)}.value()")
-      }
-      ctx.addImmutableStateIfNotExists("graft.functions.TagEnvoMemo", memoTerm,
-        v => s"$v = new graft.functions.TagEnvoMemo($ac);")
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $memoTerm.tag($c);")
-    } else dict match {
-      case None =>
-        nullSafeCodeGen(ctx, ev, c =>
-          s"${ev.value} = graft.functions.TagEnvoMentions.evalText($c);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // one memo per generated class and automaton: the non-empty filter
+    // pushed below the projection evaluates tag_envo a second time per
+    // row, and that call hits the memo the first one filled
+    val (memoTerm, ac) = dict match {
+      case None => ("tagEnvoMemo", "graft.functions.TagEnvoMentions.automaton()")
       case Some(bc) =>
-        val bcRef = ctx.addReferenceObj("tagEnvoDictBc", bc,
-          "org.apache.spark.broadcast.Broadcast")
-        val acTerm = ctx.addMutableState("graft.dict.AhoCorasick", "tagEnvoAc",
-          v => s"$v = (graft.dict.AhoCorasick) $bcRef.value();")
-        nullSafeCodeGen(ctx, ev, c =>
-          s"${ev.value} = graft.functions.TagEnvoMentions.evalWith($acTerm, $c);")
+        (s"tagEnvoMemo_b${bc.id}", s"(graft.dict.AhoCorasick) ${broadcastRef(ctx, bc)}.value()")
     }
+    ctx.addImmutableStateIfNotExists("graft.functions.TagEnvoMemo", memoTerm,
+      v => s"$v = new graft.functions.TagEnvoMemo($ac);")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $memoTerm.tag($c);")
+  }
 
   /** The broadcast's slot in the generated class's references, added once
     * per broadcast id: every tag_envo sharing a memo must emit the same
@@ -115,12 +96,8 @@ object TagEnvoMentions {
     * the bundled dictionary resources. */
   lazy val automaton: graft.dict.AhoCorasick = graft.KgPipeline.sharedAutomaton
 
-  /** Shared interpreted/codegen evaluation body — called from generated
-    * Java via the companion's static forwarder. */
-  def evalText(input: UTF8String): ArrayData = evalWith(automaton, input)
-
-  /** The same body against an explicit automaton (injected-dictionary
-    * path — also a static forwarder for codegen). */
+  /** Tag one text with an automaton, no memo: the body every memo miss
+    * runs, and the reference the tests hold the memo to. */
   def evalWith(automaton: graft.dict.AhoCorasick, input: UTF8String): ArrayData = {
     val spans = automaton.tag(input.toString)
     val rows = new Array[Any](spans.length)
@@ -211,23 +188,17 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("tag_envo", c)
 
   /** Explicit-session variant: registers on the session that will analyze
-    * the plan, then calls. Use from code that owns the session handle.
-    * `memo` tags each distinct text once per task (see [[TagEnvoMemo]]). */
-  def tag_envo(spark: org.apache.spark.sql.SparkSession, c: Column,
-               memo: Boolean = false): Column = {
+    * the plan, then calls. Use from code that owns the session handle. */
+  def tag_envo(spark: org.apache.spark.sql.SparkSession, c: Column): Column = {
     register(spark)
-    org.apache.spark.sql.functions.call_function(
-      if (memo) "tag_envo_memo" else "tag_envo", c)
+    org.apache.spark.sql.functions.call_function("tag_envo", c)
   }
 
-  /** Register `tag_envo` (and its per-task memoized twin `tag_envo_memo`)
-    * + `vec_dot` + the IVF cell primitives for SQL use on an existing
-    * session. */
+  /** Register `tag_envo` + `vec_dot` + the IVF cell primitives for SQL use
+    * on an existing session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "tag_envo", exprs => TagEnvoMentions(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tag_envo_memo", exprs => TagEnvoMentions(exprs.head, memo = true), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot", exprs => {
         require(exprs.length == 2, s"vec_dot takes 2 arguments, got ${exprs.length}")
@@ -277,14 +248,13 @@ object GraftFunctions {
   /** Column-API tagger with an INJECTED dictionary automaton: registers a
     * per-broadcast function name (`tag_envo_b<id>` — broadcast ids are
     * session-unique, so concurrent pipelines with different dictionaries
-    * never collide) whose factory closes over the broadcast handle.
-    * `memo` as in [[tag_envo]] (registered as `tag_envo_memo_b<id>`). */
+    * never collide) whose factory closes over the broadcast handle. */
   def tag_envo_with(spark: org.apache.spark.sql.SparkSession,
                     dict: org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick],
-                    c: Column, memo: Boolean = false): Column = {
-    val name = s"tag_envo${if (memo) "_memo" else ""}_b${dict.id}"
+                    c: Column): Column = {
+    val name = s"tag_envo_b${dict.id}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TagEnvoMentions(exprs.head, Some(dict), memo), "built-in")
+      name, exprs => TagEnvoMentions(exprs.head, Some(dict)), "built-in")
     org.apache.spark.sql.functions.call_function(name, c)
   }
 }

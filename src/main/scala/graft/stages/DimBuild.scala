@@ -41,15 +41,7 @@ object DimBuild {
       if (raw.columns.contains("seq_length")) raw.filter(col("seq_length") < lengthCutoff)
       else raw
 
-    val tagged = cut
-      .groupBy("source").agg(min("row_order").as("first_seen"))
-      .withColumn("mentions", GraftFunctions.tag_envo(spark, col("source")))
-      .filter(size(col("mentions")) > 0)
-      // the reference's envos blob: ENVO ints flattened across matches in
-      // document order (add_tagger_results.py:127-129)
-      .select(col("source"), col("first_seen"), expr("flatten(mentions.envos)").as("envos"))
-
-    val ordered = tagged.orderBy("first_seen")
+    val ordered = taggedSources(spark, cut).orderBy("first_seen")
     val schema = ordered.schema.add("isokey", LongType, nullable = false)
     val isolationDim = spark.createDataFrame(
         ordered.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
@@ -69,4 +61,15 @@ object DimBuild {
 
     BuiltDims(isolationDim, giDim, dataView)
   }
+
+  /** STEP 2+3: (source, first_seen, envos) for every distinct source with
+    * at least one ENVO mention. */
+  private[graft] def taggedSources(spark: SparkSession, records: DataFrame): DataFrame =
+    records
+      .groupBy("source").agg(min("row_order").as("first_seen"))
+      .withColumn("mentions", GraftFunctions.tag_envo(spark, col("source")))
+      .filter(size(col("mentions")) > 0)
+      // the reference's envos blob: ENVO ints flattened across matches in
+      // document order (add_tagger_results.py:127-129)
+      .select(col("source"), col("first_seen"), expr("flatten(mentions.envos)").as("envos"))
 }

@@ -52,7 +52,7 @@ import graft.dict.EnvoDict
   * conv list is never shuffled.
   *
   * Config/dict lock: the manifest carries every knob that changes stage
-  * output (ScoreConfig, dedupeTexts, dictionary content digest). An append
+  * output (ScoreConfig, dictionary content digest). An append
   * under a different configuration fails loudly — same invariant as the
   * checkpoint fingerprint and d18's frozen stop-shingle set: indexed
   * results must not drift as batches arrive.
@@ -67,7 +67,7 @@ object IncrementalKg {
   private def manifestPath(dir: String) = Paths.get(dir, "index.manifest.json")
 
   private def configKey(cfg: PipelineConfig, dict: EnvoDict): String =
-    s"${cfg.score}|dedupe=${cfg.dedupeTexts}|dict:${dict.contentDigest}"
+    s"${cfg.score}|dict:${dict.contentDigest}"
 
   /** (committed batch count, configKey, compacted-through batch) or None
     * for a fresh store. `compacted` defaults to 0 for pre-compaction
@@ -114,7 +114,7 @@ object IncrementalKg {
 
   /** Ingest one batch of turns; returns what was appended. */
   def append(spark: SparkSession, indexDir: String, turns: DataFrame,
-             cfg: PipelineConfig = PipelineConfig(persistIntermediates = true),
+             cfg: PipelineConfig = PipelineConfig(),
              dictOverride: Option[EnvoDict] = None): AppendStats = {
     val pipe = new KgPipeline(spark, cfg, dictOverride)
     val key = configKey(cfg, pipe.dict)

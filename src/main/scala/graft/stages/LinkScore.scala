@@ -65,8 +65,8 @@ object LinkScore {
     //     set-of-isokeys / keep-first semantics. Rows with a NULL key are
     //     dropped (a NULL never names a first turn).
     //     Hash-width note: dedup keys on the 64-bit text_hash WITHOUT the
-    //     text. Unlike MentionDetect's global join-back (birthday paradox
-    //     over ALL distinct corpus texts — text equality required there),
+    //     text. Unlike the tagger's memo (birthday paradox over ALL
+    //     distinct texts of a task — it keys on the full text bytes),
     //     this collision space is per-conversation: two different texts
     //     must collide within ONE conv_id to mis-dedupe. At 10^12 turns /
     //     10^9 convs the expected number of affected conversations is

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
  * The Spark-first recast of the reference's tagger stage
  * (seqenv/data_sources/add_tagger_results.py:114-134), which tags each
  * DISTINCT text once. Here that dedupe happens inside the task, not across
- * the cluster: the tagger is one shuffle-free projection over the turns,
- * and `dedupeTexts` only turns on the tagger's bounded per-task memo (see
+ * the cluster: the tagger is one shuffle-free projection over the turns
+ * whose bounded per-task memo tags each distinct text once (see
  * [[graft.functions.TagEnvoMemo]]). A global distinct plus join-back would
  * cost two text-carrying shuffles to save tagging that runs at about a
  * million short texts per second per core.
@@ -28,19 +28,20 @@ object MentionDetect {
     * Only turns with ≥1 mention survive (non-empty filter), matching the
     * reference's "GIs with envo" restriction (seqenv/analysis.py:333-336).
     *
-    * `dedupeTexts = true` (default) memoizes the tagger per task: a text
-    * repeated within a partition is tagged once while it stays in the
-    * bounded memo. It wins when repeats are spread across the corpus
-    * (tool banners, templates); it dedupes only within a task, never
-    * across partitions, and it compares full text bytes, so it can never
-    * pair two different texts. `false` tags every turn with no memo.
-    * Both are the same zero-shuffle projection with the same output.
+    * The tagger is memoized per task: a text repeated within a partition
+    * is tagged once while it stays in the bounded memo, and the pushed-down
+    * non-empty filter's call hits the entry the projection's call needs.
+    * It dedupes only within a task, never across partitions, and it
+    * compares full text bytes, so it can never pair two different texts.
+    *
+    * `dedupeTexts` is ignored; deleted once the benchmark stops passing it.
     *
     * `dict`: an optional broadcast automaton to tag with INSTEAD of the
     * JVM-global bundled dictionary — the injectable-dictionary path that
     * lets the composed pipeline run under a caller-supplied vocabulary
     * (tests, the restricted-dictionary driver gate, domain dictionaries). */
   def detect(spark: SparkSession, turns: DataFrame,
+             @deprecated("ignored: the tagger always memoizes per task", "0.1.0")
              dedupeTexts: Boolean = true,
              dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]] = None): DataFrame = {
     // the native TagEnvoMentions Catalyst expression inside a plain
@@ -48,9 +49,9 @@ object MentionDetect {
     // with whatever else the projection computes
     val mentions = dict match {
       case Some(bc) =>
-        graft.functions.GraftFunctions.tag_envo_with(spark, bc, col("text"), memo = dedupeTexts)
+        graft.functions.GraftFunctions.tag_envo_with(spark, bc, col("text"))
       case None =>
-        graft.functions.GraftFunctions.tag_envo(spark, col("text"), memo = dedupeTexts)
+        graft.functions.GraftFunctions.tag_envo(spark, col("text"))
     }
     turns
       .select(col("conv_id"), col("turn_idx"), col("tool"),

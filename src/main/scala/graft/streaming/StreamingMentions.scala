@@ -126,12 +126,12 @@ object StreamingMentions {
     *
     * `dedupe=false` disables the content-hash gate (exact duplicate TEXTS
     * across conversations are legitimate in transcript corpora; the
-    * pipeline's dedupeTexts memo already tags a text repeated within a
-    * task only once) —
+    * tagger's per-task memo already tags a text repeated within a task
+    * only once) —
     * with it off, N streamed appends reproduce one whole-corpus batch run
     * byte-exactly (IncrementalKgSpec pins it against the o14 contract). */
   def ingestToStore(spark: SparkSession, turns: Dataset[Turn], indexDir: String,
-                    cfg: graft.PipelineConfig = graft.PipelineConfig(persistIntermediates = true),
+                    cfg: graft.PipelineConfig = graft.PipelineConfig(),
                     dictOverride: Option[graft.dict.EnvoDict] = None,
                     dedupe: Boolean = false,
                     minQuality: Double = 0.0,

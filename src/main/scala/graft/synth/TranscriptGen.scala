@@ -72,7 +72,7 @@ object TranscriptGen {
     val convId = f"conv$convIdx%08d"
     (0 until nTurns).map { t =>
       val pick = rng.nextInt(10)
-      // mostly-unique texts (suffix varies) so the distinct-text rewrite is
+      // mostly-unique texts (suffix varies) so the tagger's memo is
       // exercised honestly; picks 5 and 6 are exact repeats for ui/upui
       val base = pick match {
         case 0 | 1 =>

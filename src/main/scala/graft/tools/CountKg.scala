@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{KgPipeline, PipelineConfig, Sessions}
+import graft.{KgPipeline, Sessions}
 
 /** Untimed triple count of the flagship pipeline over a turns parquet —
   * the exact `allTriples.count()` the scaling pairs time, for recording
@@ -13,8 +13,7 @@ object CountKg {
     val spark = Sessions.local(cores, shufflePartitions = 64, appName = "count-kg")
     val turns = spark.read.parquet(path)
     val nTurns = turns.count()
-    val nTriples = new KgPipeline(spark, PipelineConfig(
-      persistIntermediates = true, dedupeTexts = false)).run(turns).allTriples.count()
+    val nTriples = new KgPipeline(spark).run(turns).allTriples.count()
     println(s"COUNT turns=$nTurns triples=$nTriples")
     spark.stop()
   }

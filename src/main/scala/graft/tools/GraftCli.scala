@@ -65,8 +65,7 @@ object GraftCli {
         proportional = a.get("proportional").forall(_.toBoolean),
         backtracking = a.get("backtracking").exists(_.toBoolean),
         restrict = restrict),
-      checkpointDir = a.get("checkpoint_dir"),
-      persistIntermediates = true)
+      checkpointDir = a.get("checkpoint_dir"))
 
     val spark = Sessions.local(a.getOrElse("num_threads", "8").toInt, appName = "graft-cli")
     val turnsAll = a.get("input") match {

@@ -1,19 +1,15 @@
 package graft.tools
 
-import graft.{KgPipeline, PipelineConfig, Sessions}
+import graft.{KgPipeline, Sessions}
 import graft.stages._
 import graft.synth.TranscriptGen
 
 /** Per-stage wall-clock profile of the KG pipeline at a given core count.
-  * Usage: ProfileKg <turnsParquet> <cores> [direct] [sp=N]
-  *   [explain | jobs [warm]] [pq]
-  * `direct` profiles mention detection without the per-task tagger memo
-  * (dedupeTexts = false); the default memoizes it. */
+  * Usage: ProfileKg <turnsParquet> <cores> [sp=N] [explain | jobs [warm]] [pq] */
 object ProfileKg {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val cores = args(1).toInt
-    val dedupe = args.length < 3 || args(2) != "direct"
     // sp=N pins shuffle partitions independently of cores (Bench holds 64
     // fixed across the scaling pair; default here mirrors cores)
     val sp = args.collectFirst { case a if a.startsWith("sp=") => a.drop(3).toInt }.getOrElse(cores)
@@ -27,12 +23,13 @@ object ProfileKg {
     time("read+count") { turns.count() }
     val pipe = new KgPipeline(spark)
     // warmup
-    new KgPipeline(spark).run(turns.limit(2000)).annotated.count()
+    val warm = new KgPipeline(spark).run(turns.limit(2000))
+    warm.annotated.count()
+    warm.unpersist()
 
-    // The bench's flagship shape: direct tagging, shared intermediates,
-    // one allTriples action.
-    def flagship() = new KgPipeline(spark, PipelineConfig(
-      persistIntermediates = true, dedupeTexts = false)).run(turns)
+    // The bench's flagship shape: shared intermediates, one allTriples
+    // action.
+    def flagship() = new KgPipeline(spark).run(turns)
 
     // explain mode: print the allTriples physical plan — exchange/scan
     // counts are the scale story
@@ -136,7 +133,7 @@ object ProfileKg {
       return
     }
 
-    val tm = MentionDetect.detect(spark, turns, dedupe)
+    val tm = MentionDetect.detect(spark, turns)
     time("mention_detect") { tm.count() }
     val er = MentionDetect.envoRows(tm)
     time("envo_rows") { er.count() }

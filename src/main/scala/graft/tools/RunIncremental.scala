@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{PipelineConfig, Sessions}
+import graft.Sessions
 import graft.stages.IncrementalKg
 import graft.synth.TranscriptGen
 
@@ -18,19 +18,18 @@ object RunIncremental {
 
     val spark = Sessions.local(8)
     import spark.implicits._
-    val cfg = PipelineConfig(persistIntermediates = true)
 
     for (b <- 0 until nBatches) {
       val turns = (0L until nConvs).filter(_ % nBatches == b)
         .flatMap(i => TranscriptGen.turnsFor(i, 42L, 6, 10)).toDS.toDF
-      val s = IncrementalKg.append(spark, indexDir, turns, cfg)
+      val s = IncrementalKg.append(spark, indexDir, turns)
       println(s"batch=${s.batch} new_convs=${s.newConvs} " +
         s"skipped=${s.skippedConvs} conv_triples=${s.newConvTriples}")
     }
     // deliberate re-delivery of the first slice: must be a no-op
     val redelivered = (0L until nConvs).filter(_ % nBatches == 0)
       .flatMap(i => TranscriptGen.turnsFor(i, 42L, 6, 10)).toDS.toDF
-    val s = IncrementalKg.append(spark, indexDir, redelivered, cfg)
+    val s = IncrementalKg.append(spark, indexDir, redelivered)
     println(s"redelivery new_convs=${s.newConvs} skipped=${s.skippedConvs}")
 
     val t = IncrementalKg.triples(spark, indexDir)

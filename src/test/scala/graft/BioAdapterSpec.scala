@@ -8,7 +8,7 @@ import graft.stages.ScoreConfig
   * concept frequencies the reference's STEP 6 computes
   * (seqenv/analysis.py:338-408), using its own golden isolation-source
   * texts (generate.py:261-266). */
-class BioAdapterSpec extends SparkSpec {
+class BioAdapterSpec extends CacheHygiene {
   import spark.implicits._
 
   // outfmt-6 rows: seq C1 hits GIs 111,222,333; C2 hits 444
@@ -41,8 +41,8 @@ class BioAdapterSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-bio").toString
     val hits = Outfmt6.hits(Outfmt6.read(spark, blastout(dir)))
     val turns = BioAdapter.turnsFromHits(spark, hits, giDim, isolationDim)
-    val r = new KgPipeline(spark, PipelineConfig(score = cfg)).run(turns)
-    r.scores.collect().map(x => (x.getString(0), x.getInt(1)) -> x.getDouble(2)).toMap
+    released(new KgPipeline(spark, PipelineConfig(score = cfg)).run(turns))(_.scores.collect()
+      .map(x => (x.getString(0), x.getInt(1)) -> x.getDouble(2)).toMap)
   }
 
   test("flat: every hit's isolation source counted (duplicates kept)") {

@@ -10,7 +10,7 @@ import graft.synth.TranscriptGen
   * classes: Spark's codegen cache is JVM-wide and, at its default size,
   * smaller than one checkpointed upui + backtracking build compiles, so
   * every later build compiled (and JIT-compiled) the same classes again. */
-class CodegenReuseSpec extends SparkSpec {
+class CodegenReuseSpec extends CacheHygiene {
 
   test("a repeated KG build compiles no new generated classes") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-codegen-reuse")
@@ -19,9 +19,7 @@ class CodegenReuseSpec extends SparkSpec {
       .write.mode("overwrite").parquet(corpus)
     val turns = spark.read.parquet(corpus)
     val cfg = PipelineConfig(
-      score = ScoreConfig("upui", proportional = true, backtracking = true),
-      persistIntermediates = true,
-      dedupeTexts = true)
+      score = ScoreConfig("upui", proportional = true, backtracking = true))
 
     // one action over every column of every triple family (the hash is
     // summed in 32-bit halves: a 64-bit sum overflows under ANSI)
@@ -33,8 +31,8 @@ class CodegenReuseSpec extends SparkSpec {
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     }
     def build(ckpt: Option[String]): Map[String, (Long, Long, Long)] = {
-      val r = new KgPipeline(spark, cfg.copy(checkpointDir = ckpt)).run(turns)
-      try digest(r.allTriples) finally r.unpersist()
+      released(new KgPipeline(spark, cfg.copy(checkpointDir = ckpt)).run(turns))(r =>
+        digest(r.allTriples))
     }
     // the compilation counter is JVM-wide: read it only around this
     // spec's own builds

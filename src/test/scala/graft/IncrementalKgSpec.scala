@@ -11,7 +11,7 @@ import graft.synth.TranscriptGen
   * conversation batches to the triple store yields exactly the triple set
   * of one whole-corpus run; re-delivery is a no-op; a config/dict change
   * against an existing index fails loudly. */
-class IncrementalKgSpec extends SparkSpec {
+class IncrementalKgSpec extends CacheHygiene {
   import spark.implicits._
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, Double, Long)] =
@@ -27,7 +27,7 @@ class IncrementalKgSpec extends SparkSpec {
     val batchB = all.filter(expr("cast(substring(conv_id, 5, 8) as int) % 2 = 1"))
     val dir = Files.createTempDirectory("graft-inc-kg").toString
 
-    val cfg = PipelineConfig(persistIntermediates = true)
+    val cfg = PipelineConfig()
     val sA = IncrementalKg.append(spark, dir, batchA, cfg)
     assert(sA.batch === 1 && sA.newConvs === 40L && sA.skippedConvs === 0L)
     val sB = IncrementalKg.append(spark, dir, batchB, cfg)
@@ -64,7 +64,7 @@ class IncrementalKgSpec extends SparkSpec {
     val all = (0L until 60L).flatMap(i => TranscriptGen.turnsFor(i, 11L, 6, 10)).toDS.toDF
     def third(k: Int) = all.filter(expr(s"cast(substring(conv_id, 5, 8) as int) % 3 = $k"))
     val dir = Files.createTempDirectory("graft-inc-compact").toString
-    val cfg = PipelineConfig(persistIntermediates = true)
+    val cfg = PipelineConfig()
     IncrementalKg.append(spark, dir, third(0), cfg)
     IncrementalKg.append(spark, dir, third(1), cfg)
     val before = rows(IncrementalKg.triples(spark, dir))
@@ -108,7 +108,7 @@ class IncrementalKgSpec extends SparkSpec {
     val convs = (0L until 30L).map(i => TranscriptGen.turnsFor(i, 13L, 6, 10))
     val all = convs.flatten.toDS.toDF
     val dir = Files.createTempDirectory("graft-inc-stream").toString
-    val cfg = PipelineConfig(persistIntermediates = true)
+    val cfg = PipelineConfig()
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[graft.model.Turn]
     val q = graft.streaming.StreamingMentions.ingestToStore(
@@ -136,7 +136,7 @@ class IncrementalKgSpec extends SparkSpec {
     val convs = (100L until 130L).map(i => TranscriptGen.turnsFor(i, 13L, 6, 10))
     val all = convs.flatten.toDS.toDF
     val dir = Files.createTempDirectory("graft-inc-stream-compact").toString
-    val cfg = PipelineConfig(persistIntermediates = true)
+    val cfg = PipelineConfig()
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[graft.model.Turn]
     val q = graft.streaming.StreamingMentions.ingestToStore(

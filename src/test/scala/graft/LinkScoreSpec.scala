@@ -10,7 +10,7 @@ import graft.stages.{LinkScore, MentionDetect, ScoreConfig}
   * Texts: {"lake mud of the lake", same again (dup), "marine wetland"}.
   * Tagger output per text: lake-mud text -> [20, 1000001, 20]; marine
   * wetland -> [447, 569, 43]. */
-class LinkScoreSpec extends SparkSpec {
+class LinkScoreSpec extends CacheHygiene {
   import spark.implicits._
 
   private def turn(conv: String, idx: Int, text: String, tool: Option[String]) =
@@ -229,7 +229,7 @@ class LinkScoreSpec extends SparkSpec {
     val occs = randomOccs(seed = 17, concepts)
     val plain = occs.map(o => (o.conv, o.turn, o.tool, o.textHash, o.envo))
       .toDF("conv_id", "turn_idx", "tool", "text_hash", "envo")
-    // the pipeline's partcache layout (KgPipeline.run, persistIntermediates)
+    // the pipeline's partcache layout (KgPipeline.run)
     val partcache = plain.repartition(4, $"conv_id")
       .sortWithinPartitions($"conv_id", $"turn_idx").persist()
     partcache.count()

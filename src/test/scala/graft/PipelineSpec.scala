@@ -59,16 +59,14 @@ object NaiveOracle {
   }
 }
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends CacheHygiene {
   import spark.implicits._
 
   test("e2e golden: engine triples match the naive oracle (P/R target 1.0)") {
     val turns = (0L until 200L).flatMap(i => TranscriptGen.turnsFor(i, seed = 7L, meanTurns = 6, skewFactor = 25))
-    val result = new KgPipeline(spark).run(turns.toDS.toDF)
-
-    val got = result.annotated
+    val got = released(new KgPipeline(spark).run(turns.toDS.toDF))(_.annotated
       .select("subj", "obj", "weight").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap)
     val expected = NaiveOracle.flatTriples(turns, proportional = true)
 
     val gotKeys = got.keySet
@@ -88,8 +86,7 @@ class PipelineSpec extends SparkSpec {
   test("mention triples carry conv_id:turn_idx subjects and span provenance") {
     val turns = Seq(
       Turn("c9", 3, "user", "the ocean was calm", None, new java.sql.Timestamp(0L)))
-    val r = new KgPipeline(spark).run(turns.toDS.toDF)
-    val rows = r.mentionTriples.collect()
+    val rows = released(new KgPipeline(spark).run(turns.toDS.toDF))(_.mentionTriples.collect())
     assert(rows.length === 1)
     val row = rows.head
     assert(row.getAs[String]("subj") === "c9:3")
@@ -107,9 +104,8 @@ class PipelineSpec extends SparkSpec {
       Turn("a", 2, "user", "lake mud of the lake", None, ts), // lake again + mud
       Turn("b", 0, "user", "the ocean was calm", None, ts),
       Turn("b", 1, "user", "bacterioplankton sample from lake", None, ts))
-    val r = new KgPipeline(spark).run(turns.toDS.toDF)
-    val edges = r.coOccurrence.collect()
-      .map(x => (x.getInt(0), x.getInt(1)) -> x.getLong(2)).toMap
+    val edges = released(new KgPipeline(spark).run(turns.toDS.toDF))(_.coOccurrence.collect()
+      .map(x => (x.getInt(0), x.getInt(1)) -> x.getLong(2)).toMap)
     assert(edges((15, 20)) === 2L) // ocean+lake co-occur in both convs
     assert(edges((20, 1000001)) === 1L) // lake+mud only in conv a
     assert(edges.keys.forall { case (x, y) => x < y })
@@ -118,8 +114,8 @@ class PipelineSpec extends SparkSpec {
   test("per-conversation ontology subgraph: concepts + ancestors, closed edges") {
     val r = new KgPipeline(spark).run(
       Seq(Turn("s1", 0, "user", "the ocean was calm", None, new java.sql.Timestamp(0L))).toDS.toDF)
-    val sub = graft.stages.TripleEmit.convSubgraphs(spark, r.scores, KgPipeline.sharedDict)
-      .collect().map(x => (x.getString(1), x.getString(2), x.getString(3)))
+    val sub = released(r)(r => graft.stages.TripleEmit.convSubgraphs(spark, r.scores,
+      KgPipeline.sharedDict).collect().map(x => (x.getString(1), x.getString(2), x.getString(3))))
     // ocean -> marine water body must be present; every edge endpoint is in
     // the closure of {ocean}
     assert(sub.contains(("ENVO:00000015", "is_a", "ENVO:00001999")))
@@ -133,9 +129,11 @@ class PipelineSpec extends SparkSpec {
   test("DOT sources: well-formed digraph per conversation, no driver collect") {
     val r = new KgPipeline(spark).run(
       Seq(Turn("s1", 0, "user", "the ocean was calm", None, new java.sql.Timestamp(0L))).toDS.toDF)
-    val sub = graft.stages.TripleEmit.convSubgraphs(spark, r.scores, KgPipeline.sharedDict)
-    val dots = graft.stages.TripleEmit.dotSources(spark, sub, KgPipeline.sharedDict)
-      .collect().map(x => (x.getString(0), x.getString(1))).toMap
+    val dots = released(r) { r =>
+      val sub = graft.stages.TripleEmit.convSubgraphs(spark, r.scores, KgPipeline.sharedDict)
+      graft.stages.TripleEmit.dotSources(spark, sub, KgPipeline.sharedDict)
+        .collect().map(x => (x.getString(0), x.getString(1))).toMap
+    }
     val dot = dots("s1")
     assert(dot.startsWith("digraph envo {"))
     assert(dot.endsWith("}"))
@@ -148,7 +146,7 @@ class PipelineSpec extends SparkSpec {
     edgeCuries.foreach(c => assert(dot.contains(s""""$c" [label="""), s"no label for $c"))
   }
 
-  test("injected dictionary drives the COMPOSED run, both tagging strategies") {
+  test("injected dictionary drives the COMPOSED run") {
     val ts = new java.sql.Timestamp(0L)
     val turns = Seq(
       Turn("a", 0, "user", "the ocean was calm near the lake", None, ts),
@@ -159,34 +157,27 @@ class PipelineSpec extends SparkSpec {
     val tiny = full.copy(formToSerials =
       full.formToSerials.filter(kv => Set("ocean", "lake").contains(kv._1)))
 
-    def objsOf(dedupe: Boolean): Map[(String, String), Double] =
-      new KgPipeline(spark, PipelineConfig(dedupeTexts = dedupe),
-          dictOverride = Some(tiny))
-        .run(turns.toDS.toDF).annotated
-        .select("subj", "obj", "weight").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-
-    val viaDistinct = objsOf(dedupe = true)
+    val viaTiny = released(new KgPipeline(spark, dictOverride = Some(tiny))
+        .run(turns.toDS.toDF))(_.annotated
+      .select("subj", "obj", "weight").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap)
     // the injected vocabulary bounds every emitted concept
     val allowed = Set("ENVO:00000015", "ENVO:00000020") // ocean, lake
-    assert(viaDistinct.nonEmpty && viaDistinct.keySet.forall(k => allowed.contains(k._2)),
-      s"only injected-dictionary concepts may surface: $viaDistinct")
+    assert(viaTiny.nonEmpty && viaTiny.keySet.forall(k => allowed.contains(k._2)),
+      s"only injected-dictionary concepts may surface: $viaTiny")
     // conv b's only mud/bacterioplankton turn contributes nothing; conv a
     // scores ocean 1/4 (one of 4 occurrences) and lake 3/4
-    assert(math.abs(viaDistinct(("a", "ENVO:00000020")) - 0.75) < 1e-12)
-    assert(math.abs(viaDistinct(("b", "ENVO:00000015")) - 0.5) < 1e-12)
-    // the direct (no-dedupe) strategy tags with the SAME injected automaton
-    assert(objsOf(dedupe = false) === viaDistinct)
+    assert(math.abs(viaTiny(("a", "ENVO:00000020")) - 0.75) < 1e-12)
+    assert(math.abs(viaTiny(("b", "ENVO:00000015")) - 0.5) < 1e-12)
     // and the default pipeline on the same input still sees the full dict
-    val fullRun = new KgPipeline(spark).run(turns.toDS.toDF).annotated
-      .select("obj").collect().map(_.getString(0)).toSet
+    val fullRun = released(new KgPipeline(spark).run(turns.toDS.toDF))(_.annotated
+      .select("obj").collect().map(_.getString(0)).toSet)
     assert(fullRun.contains("ENVO:01000001"), "full dict must still tag mud")
   }
 
   test("thin fused run: canonical triples identical, shared frame 3 columns wide") {
     val turns = graft.synth.TranscriptGen.generate(spark, 40).toDF
-    def tripleSet(cfg: PipelineConfig) = {
-      val r = new KgPipeline(spark, cfg).run(turns)
+    def tripleSet(cfg: PipelineConfig) = released(new KgPipeline(spark, cfg).run(turns)) { r =>
       val rows = r.allTriples.collect()
         .map(x => (x.getString(0), x.getString(1), x.getString(2), x.getDouble(3), x.getLong(4)))
         .toSet
@@ -194,21 +185,16 @@ class PipelineSpec extends SparkSpec {
         .select("subj", "obj", "form", "start", "end").collect()
         .map(x => (x.getString(0), x.getString(1), x.getString(2), x.getInt(3), x.getInt(4)))
         .toSet
-      spark.sharedState.cacheManager.clearCache()
       (rows, mentions)
     }
-    val (thinAll, thinMentions) =
-      tripleSet(PipelineConfig(persistIntermediates = true))
-    val (provAll, provMentions) =
-      tripleSet(PipelineConfig(persistIntermediates = true, mentionProvenance = true))
+    val (thinAll, thinMentions) = tripleSet(PipelineConfig())
+    val (provAll, provMentions) = tripleSet(PipelineConfig(mentionProvenance = true))
     assert(thinAll === provAll, "canonical sink must not depend on mentionProvenance")
     assert(thinMentions === provMentions,
       "the full provenance frame must be schema- and row-identical on thin runs")
 
     // the thin run's wide shuffle + cache must carry exactly 3 columns
-    val rThin = new KgPipeline(spark, PipelineConfig(persistIntermediates = true))
-      .run(turns)
-    try {
+    released(new KgPipeline(spark).run(turns)) { rThin =>
       val cached = rThin.scores.queryExecution.optimizedPlan.collect {
         case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m.output.map(_.name)
       }
@@ -219,7 +205,7 @@ class PipelineSpec extends SparkSpec {
       }
       assert(envoCached.exists(_.toSet == Set("conv_id", "turn_idx", "envo")),
         s"thin shared frame must be (conv_id, turn_idx, envo), got $envoCached / $cached")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("KgResult.unpersist releases every cache run() created") {
@@ -230,11 +216,9 @@ class PipelineSpec extends SparkSpec {
     val turns = graft.synth.TranscriptGen.generate(spark, 30).toDF
     def ckptDir() = Some(java.nio.file.Files.createTempDirectory("graft-unpersist").toString)
     val configs = Seq(
-      "flat" -> PipelineConfig(persistIntermediates = true),
-      "flat, checkpointed" -> PipelineConfig(persistIntermediates = true,
-        checkpointDir = ckptDir()),
-      "upui + backtracking, checkpointed" -> PipelineConfig(persistIntermediates = true,
-        checkpointDir = ckptDir(),
+      "flat" -> PipelineConfig(),
+      "flat, checkpointed" -> PipelineConfig(checkpointDir = ckptDir()),
+      "upui + backtracking, checkpointed" -> PipelineConfig(checkpointDir = ckptDir(),
         score = graft.stages.ScoreConfig("upui", backtracking = true)))
     for ((name, cfg) <- configs) {
       spark.catalog.clearCache()
@@ -253,6 +237,7 @@ class PipelineSpec extends SparkSpec {
   test("ontology triples: typed OBO edges + closure descends_from edges") {
     val r = new KgPipeline(spark).run(
       Seq(Turn("z", 0, "user", "lake", None, new java.sql.Timestamp(0L))).toDS.toDF)
+    r.unpersist() // the ontology triples read only the dictionary
     val ocean = r.ontologyTriples
       .filter($"subj" === "ENVO:00000015").select("pred", "obj").collect()
       .map(x => (x.getString(0), x.getString(1))).toSet

@@ -7,11 +7,15 @@ import graft.ops.RelationalOps
 /** Physical-plan regression guards: the plans the engine must keep at
   * 100 TB — pushdown reaching the scans, pruned read schemas, broadcast
   * dims, partial+final hash aggregation. */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends CacheHygiene {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+
+  /** `f`, then drop what the ops it plans persisted. */
+  private def uncached[A](f: => A): A =
+    try f finally spark.sharedState.cacheManager.clearCache()
 
   test("composed fused run() plans partition-LOCAL: one visible shuffle total") {
     // The r5 partcache topology: envoRows repartitioned by conv_id and
@@ -33,9 +37,7 @@ class PlanShapeSpec extends SparkSpec {
       walk(df.queryExecution.executedPlan)
         .collect { case s: ShuffleExchangeExec => s.shuffleOrigin.toString }
     val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
-    val r = new KgPipeline(spark, PipelineConfig(persistIntermediates = true))
-      .run(turns)
-    try {
+    released(new KgPipeline(spark).run(turns)) { r =>
       assert(shuffles(r.scores).isEmpty,
         s"scores must be local over the caches: ${shuffles(r.scores)}")
       assert(shuffles(r.annotated).isEmpty,
@@ -45,7 +47,7 @@ class PlanShapeSpec extends SparkSpec {
         s"allTriples must have exactly the pair-agg exchange, got $all")
       assert(!plan(r.allTriples).contains("SortMergeJoin"),
         "the scores×support SMJ must stay deleted from the fused path")
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("ui/upui/backtracking scorer: one partcache scan, a linear partition-local plan") {
@@ -69,13 +71,11 @@ class PlanShapeSpec extends SparkSpec {
     val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
     for (norm <- Seq("ui", "upui")) {
       val cfg = ScoreConfig(norm, proportional = true, backtracking = true)
-      val r = new KgPipeline(spark, PipelineConfig(score = cfg, persistIntermediates = true))
-        .run(turns)
-      try {
+      released(new KgPipeline(spark, PipelineConfig(score = cfg)).run(turns)) { r =>
         // r.scores is the persisted scorer output: inspect the plan it caches
         val scorer = walk(r.scores.queryExecution.executedPlan).collectFirst {
           case s: InMemoryTableScanExec => s.relation.cachedPlan
-        }.getOrElse(fail("scores must be persisted on a persistIntermediates run"))
+        }.getOrElse(fail("run() must persist the scores"))
         val nodes = walk(scorer)
         assert(nodes.count(_.isInstanceOf[InMemoryTableScanExec]) === 1,
           s"$norm: the scorer must scan the partcache exactly once:\n$scorer")
@@ -87,9 +87,6 @@ class PlanShapeSpec extends SparkSpec {
         val limits = nodes.collect { case w: WindowGroupLimitExec => w }
         assert(limits.length === (if (norm == "ui") 1 else 2),
           s"$norm: one WindowGroupLimit per keep-first:\n$scorer")
-      } finally {
-        r.unpersist()
-        spark.sharedState.cacheManager.clearCache()
       }
     }
     // un-partitioned input (the oracle queries): the Partial limit runs
@@ -118,7 +115,11 @@ class PlanShapeSpec extends SparkSpec {
     val turns = graft.synth.TranscriptGen.generate(spark, 40).toDF
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-ckpt").toString
     val r = new KgPipeline(spark, PipelineConfig(checkpointDir = Some(dir))).run(turns)
-    val opt = r.annotated.queryExecution.optimizedPlan
+    // optimized without the cache substitution: run() persists the fused
+    // stage, and its cache would hide which stage annotated reads
+    val (opt, physical) = released(r)(r => (
+      spark.sessionState.optimizer.execute(r.annotated.queryExecution.analyzed),
+      plan(r.annotated)))
     val reads = opt.collect { case lr: LogicalRelation => lr.relation }.flatMap {
       case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
       case other => Seq(other.toString)
@@ -128,7 +129,7 @@ class PlanShapeSpec extends SparkSpec {
       s"no support aggregation may remain over the fused stage:\n$opt")
     assert(opt.collect { case j: Join => j }.length === 1,
       s"only the concept-dim join may remain:\n$opt")
-    assert(!plan(r.annotated).contains("SortMergeJoin"),
+    assert(!physical.contains("SortMergeJoin"),
       "the scores×support SMJ must stay deleted from the checkpointed fused path")
   }
 
@@ -171,7 +172,7 @@ class PlanShapeSpec extends SparkSpec {
   test("d7 verification joins only candidate-doc shingles (no all-pairs grams join)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-    val plan = graft.ops.DocOps.minhashLshPairs(spark, dir).queryExecution.optimizedPlan
+    val plan = uncached(graft.ops.DocOps.minhashLshPairs(spark, dir).queryExecution.optimizedPlan)
     // every inner join whose keys include the shingle column must sit above
     // the LeftSemi candidate-doc restriction on BOTH sides — an
     // unrestricted grams⋈grams join would be the exact all-pairs join the
@@ -198,8 +199,8 @@ class PlanShapeSpec extends SparkSpec {
   test("d18 verification joins only candidate-doc shingles, old text semi-restricted") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-    val plan = graft.ops.DocOps.incrementalNearDupQuery(spark, dir)
-      .queryExecution.optimizedPlan
+    val plan = uncached(graft.ops.DocOps.incrementalNearDupQuery(spark, dir)
+      .queryExecution.optimizedPlan)
     // same discipline as d7: the Jaccard-verification shingle join must sit
     // above candidate restrictions on both sides — otherwise the "index"
     // op secretly rescans and self-joins the whole old corpus
@@ -234,7 +235,7 @@ class PlanShapeSpec extends SparkSpec {
     // the whole point of the bucketed near-dup is replacing e2's quadratic
     // cross join with bucket equi-joins — a cartesian anywhere in the plan
     // means the scale path regressed to all-pairs
-    val p = plan(graft.ops.EmbedOps.lshNearDupPairs(spark, dir))
+    val p = uncached(plan(graft.ops.EmbedOps.lshNearDupPairs(spark, dir)))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
@@ -244,7 +245,7 @@ class PlanShapeSpec extends SparkSpec {
     // the within-cell self-join must be an equi-join on the cell key, and
     // the pair join must move (vec_id, cell) scalars with vectors joined
     // back by id (the e5 pattern)
-    val p = plan(graft.ops.EmbedOps.semanticDedup(spark, dir))
+    val p = uncached(plan(graft.ops.EmbedOps.semanticDedup(spark, dir)))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
@@ -253,7 +254,7 @@ class PlanShapeSpec extends SparkSpec {
     // window-hash duplicate detection must be groupBy(h) + join-back — a
     // boilerplate window shared by f docs costs one combine, not f² pairs;
     // the span merge is a per-document window (doc-local)
-    val p = plan(graft.ops.DocOps.repeatedSpansQuery(spark, dir))
+    val p = uncached(plan(graft.ops.DocOps.repeatedSpansQuery(spark, dir)))
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("HashAggregate"), p)
     // the (doc_id, pos, h) hash frame feeds the agg AND the join-back: the
@@ -276,9 +277,8 @@ class PlanShapeSpec extends SparkSpec {
   test("m5 media feature near-dup plan has no cartesian or nested-loop join") {
     // m5 shipped as a brute crossJoin in round 2 while the e5 bucketing
     // machinery existed for exactly this — guard the bucketed plan
-    val features = graft.ops.MultimodalOps.extractFeatures(
-      spark, graft.ops.MultimodalOps.synthMedia(spark, 50))
-    val p = plan(graft.ops.MultimodalOps.featureNearDup(spark, features))
+    val p = uncached(plan(graft.ops.MultimodalOps.featureNearDup(spark,
+      graft.ops.MultimodalOps.extractFeatures(spark, graft.ops.MultimodalOps.synthMedia(spark, 50)))))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
@@ -287,7 +287,7 @@ class PlanShapeSpec extends SparkSpec {
     // regression guard for the round-2 2x fix: the band self-join consumes
     // bands twice; without the persist the tokenize->12xmd5->minhash
     // pipeline executes once per side (measured 16.7s vs 6.1s at sf0.1)
-    val p = plan(graft.ops.DocOps.minhashLshPairs(spark, dir))
+    val p = uncached(plan(graft.ops.DocOps.minhashLshPairs(spark, dir)))
     assert(p.contains("InMemoryTableScan"), p)
   }
 
@@ -308,54 +308,75 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("mention detect direct path has no shuffle before the tagger") {
-    // both settings of dedupeTexts are one projection: the memoized tagger
-    // dedupes inside the task, never by a distinct + join-back
+    // the tagger is one projection: its memo dedupes inside the task,
+    // never by a distinct + join-back
     val turns = graft.synth.TranscriptGen.generate(spark, 10).toDF
-    for (dedupe <- Seq(false, true)) {
-      val p = plan(graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = dedupe))
-      assert(!p.contains("Exchange"), s"dedupeTexts=$dedupe tagging must be shuffle-free:\n$p")
-      assert(!p.contains("Join"), s"dedupeTexts=$dedupe tagging must be join-free:\n$p")
-    }
+    val p = plan(graft.stages.MentionDetect.detect(spark, turns))
+    assert(!p.contains("Exchange"), s"tagging must be shuffle-free:\n$p")
+    assert(!p.contains("Join"), s"tagging must be join-free:\n$p")
+  }
+
+  /** The generated code of every codegen span that tags: each holds ONE
+    * memo. */
+  private def taggingSpans(df: DataFrame): Seq[String] = {
+    val spans = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+      .filter(_.contains("TagEnvoMemo"))
+    assert(spans.nonEmpty, s"tag_envo must be fused into a codegen span:\n" +
+      df.queryExecution.executedPlan)
+    spans.foreach(code =>
+      assert("new graft\\.functions\\.TagEnvoMemo\\(".r.findAllIn(code).length === 1,
+        s"expected one memo in the generated class:\n$code"))
+    spans
   }
 
   /** The optimizer pushes the non-empty filter below the tagging
-    * projection, so tag_envo is generated twice per stage; a memoized
-    * stage must share ONE memo between the two calls (the second call per
-    * row then hits) and a plain stage must have none. */
-  private def assertMemos(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-    val code = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
-    assert("\\.tag\\(|evalText\\(|evalWith\\(".r.findAllIn(code).length === 2,
+    * projection, so tag_envo is generated twice per stage; the two calls
+    * must share ONE memo (the second call per row then hits). */
+  private def assertSharedMemo(df: DataFrame): Unit = {
+    val code = taggingSpans(df).mkString("\n")
+    assert("\\.tag\\(".r.findAllIn(code).length === 2,
       s"tag_envo must be generated in the filter and the projection:\n$code")
-    assert("new graft\\.functions\\.TagEnvoMemo\\(".r.findAllIn(code).length === n,
-      s"expected $n memo(s) in the generated code:\n$code")
   }
 
   test("tag_envo expression is whole-stage-codegen'd, not a fallback") {
     // fallback=false makes Janino compilation failures THROW instead of
     // silently demoting the stage to interpreted eval — this pins that the
-    // doGenCode paths (plain static call, and the per-instance memo that
-    // dedupeTexts turns on) really compile and run
+    // memoized doGenCode really compiles and runs
     val turns = graft.synth.TranscriptGen.generate(spark, 20).toDF
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      for (dedupe <- Seq(false, true)) {
-        val detected = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = dedupe)
-        assert(detected.count() > 0)
-        // the tagging projection must sit INSIDE a WholeStageCodegen span —
-        // under CodegenFallback it would be hoisted out of every span
-        val spans = detected.queryExecution.executedPlan.collect {
-          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-            if w.toString.contains("tag_envo") => w
-        }
-        assert(spans.nonEmpty, s"dedupeTexts=$dedupe: tag_envo must be fused into a " +
-          s"codegen span:\n${detected.queryExecution.executedPlan}")
-        assertMemos(detected, if (dedupe) 1 else 0)
-      }
+      val detected = graft.stages.MentionDetect.detect(spark, turns)
+      assert(detected.count() > 0)
+      // the tagging projection must sit INSIDE a WholeStageCodegen span —
+      // under CodegenFallback it would be hoisted out of every span
+      assertSharedMemo(detected)
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
+  test("SQL tag_envo (GraftExtensions, DimBuild) fuses into codegen with one memo") {
+    // the tagger is stateful (its memo): that must cost the SQL surface no
+    // codegen. A fresh session resolves tag_envo through GraftExtensions
+    // alone; DimBuild tags its distinct sources through the Column API.
+    val sql = spark.newSession()
+    val turns = graft.synth.TranscriptGen.generate(sql, 20).toDF
+    turns.createOrReplaceTempView("turns")
+    sql.conf.set("spark.sql.codegen.fallback", "false")
+    // executed first: adaptive plans insert their codegen spans as they run
+    val viaSql = sql.sql("SELECT conv_id, tag_envo(text) AS m FROM turns")
+    assert(viaSql.collect().exists(_.getSeq[Any](1).nonEmpty))
+    taggingSpans(viaSql)
+    val records = turns.select(
+      org.apache.spark.sql.functions.col("turn_idx").cast("long").as("gi"),
+      org.apache.spark.sql.functions.col("text").as("source"),
+      org.apache.spark.sql.functions.monotonically_increasing_id().as("row_order"))
+    val sources = graft.stages.DimBuild.taggedSources(sql, records)
+    assert(sources.collect().nonEmpty)
+    taggingSpans(sources)
+  }
+
   test("upui + backtracking partcache holds the build's only shuffle: hashpartitioning(conv_id)") {
-    // dedupeTexts (the default) tags in the task, so the conv_id
+    // the tagger dedupes in the task, so the conv_id
     // repartition that builds the partcache is the one wide shuffle of an
     // un-checkpointed build: no text_hash exchange, no join below it
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -372,12 +393,10 @@ class PlanShapeSpec extends SparkSpec {
     }
     val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
     val cfg = graft.stages.ScoreConfig("upui", proportional = true, backtracking = true)
-    val r = new KgPipeline(spark, PipelineConfig(score = cfg, persistIntermediates = true,
-      dedupeTexts = true)).run(turns)
-    try {
+    released(new KgPipeline(spark, PipelineConfig(score = cfg)).run(turns)) { r =>
       val scorer = walk(r.scores.queryExecution.executedPlan).collectFirst {
         case s: InMemoryTableScanExec => s.relation.cachedPlan
-      }.getOrElse(fail("scores must be persisted on a persistIntermediates run"))
+      }.getOrElse(fail("run() must persist the scores"))
       val partcache = walk(scorer).collectFirst {
         case s: InMemoryTableScanExec => s.relation.cachedPlan
       }.getOrElse(fail(s"the scorer must read the partcache:\n$scorer"))
@@ -392,9 +411,6 @@ class PlanShapeSpec extends SparkSpec {
       }
       assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
         s"no join-back below the partcache:\n$partcache")
-    } finally {
-      r.unpersist()
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -443,23 +459,19 @@ class PlanShapeSpec extends SparkSpec {
     // coded corpus to the broadcast probe rows on the CELL key (equi-join,
     // never corpus×corpus), and the coded frame feeding both sides is
     // persisted
-    val p = plan(graft.ops.EmbedOps.ivfSqTopK(spark, dir))
-    try {
-      assert(!p.contains("CartesianProduct"), p)
-      assert(p.contains("BroadcastHashJoin"), p)
-      assert(p.contains("InMemoryTableScan"), p)
-    } finally spark.sharedState.cacheManager.clearCache()
+    val p = uncached(plan(graft.ops.EmbedOps.ivfSqTopK(spark, dir)))
+    assert(!p.contains("CartesianProduct"), p)
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(p.contains("InMemoryTableScan"), p)
   }
 
   test("e7 SQ scan broadcasts the query codes and persists the coded frame") {
     // the candidate scan is broadcast(nQueries code rows) x corpus — an
     // unhinted plan would CartesianProduct corpus x corpus; and the
     // quantization pipeline feeds both scan sides, so it must be cached
-    val p = plan(graft.ops.EmbedOps.sqTopK(spark, dir))
-    try {
-      assert(!p.contains("CartesianProduct"), p)
-      assert(p.contains("InMemoryTableScan"), p)
-    } finally spark.sharedState.cacheManager.clearCache()
+    val p = uncached(plan(graft.ops.EmbedOps.sqTopK(spark, dir)))
+    assert(!p.contains("CartesianProduct"), p)
+    assert(p.contains("InMemoryTableScan"), p)
   }
 
   test("o15 lift joins marginals and dims broadcast onto the pair counts") {
@@ -469,15 +481,13 @@ class PlanShapeSpec extends SparkSpec {
     val scores = Seq(("c1", ids(0)), ("c1", ids(1)), ("c2", ids(0)))
       .toDF("conv_id", "envo")
       .withColumn("score", org.apache.spark.sql.functions.lit(1.0))
-    val p = plan(graft.stages.TripleEmit.coOccurrenceLift(spark, scores, dict))
-    try {
-      // the ONLY corpus-grain join allowed is the within-conv pair
-      // self-join; marginals, the scalar total, and the concept dim are
-      // |EnvO|-bounded and must arrive as broadcasts
-      assert(p.contains("BroadcastHashJoin"), p)
-      val smjCount = "SortMergeJoin".r.findAllIn(p).length
-      assert(smjCount <= 1, s"only the pair self-join may sort-merge:\n$p")
-    } finally spark.sharedState.cacheManager.clearCache()
+    val p = uncached(plan(graft.stages.TripleEmit.coOccurrenceLift(spark, scores, dict)))
+    // the ONLY corpus-grain join allowed is the within-conv pair
+    // self-join; marginals, the scalar total, and the concept dim are
+    // |EnvO|-bounded and must arrive as broadcasts
+    assert(p.contains("BroadcastHashJoin"), p)
+    val smjCount = "SortMergeJoin".r.findAllIn(p).length
+    assert(smjCount <= 1, s"only the pair self-join may sort-merge:\n$p")
   }
 
   test("o17 walk iterates broadcast-join off one persisted edge frame") {
@@ -488,15 +498,13 @@ class PlanShapeSpec extends SparkSpec {
       .toDF("conv_id", "envo")
       .withColumn("score", org.apache.spark.sql.functions.lit(1.0))
     val pairs = graft.stages.TripleEmit.coOccurrence(scores)
-    val p = plan(graft.stages.TripleEmit.walkCentrality(spark, pairs, dict))
-    try {
-      // every iteration re-reads the model-state edge frame through its
-      // cache (never re-running the upstream pair agg per iterate) and
-      // receives the |EnvO|-bounded previous iterate as a broadcast
-      assert(p.contains("InMemoryTableScan"), p)
-      assert(p.contains("BroadcastHashJoin"), p)
-      assert(!p.contains("CartesianProduct"), p)
-    } finally spark.sharedState.cacheManager.clearCache()
+    val p = uncached(plan(graft.stages.TripleEmit.walkCentrality(spark, pairs, dict)))
+    // every iteration re-reads the model-state edge frame through its
+    // cache (never re-running the upstream pair agg per iterate) and
+    // receives the |EnvO|-bounded previous iterate as a broadcast
+    assert(p.contains("InMemoryTableScan"), p)
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("CartesianProduct"), p)
   }
 
   test("o18 trend window runs over the aggregated (envo, day) frame") {
@@ -540,29 +548,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("injected-dictionary tag_envo is also whole-stage-codegen'd") {
-    // the broadcast-handle path generates different code (mutable-state
-    // automaton or memo resolved from the broadcast once per generated
-    // instance) — pin that it, too, compiles under fallback=false and fuses
+    // the broadcast-handle path generates different code (the memo's
+    // automaton resolved from the broadcast once per generated instance) —
+    // pin that it, too, compiles under fallback=false and fuses
     val turns = graft.synth.TranscriptGen.generate(spark, 20).toDF
     val bc = spark.sparkContext.broadcast(KgPipeline.sharedAutomaton)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val viaDefault = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)
+      val viaDefault = graft.stages.MentionDetect.detect(spark, turns)
         .select("conv_id", "turn_idx").collect().map(_.toSeq).toSet
-      for (dedupe <- Seq(false, true)) {
-        val detected = graft.stages.MentionDetect.detect(
-          spark, turns, dedupeTexts = dedupe, dict = Some(bc))
-        assert(detected.count() > 0)
-        val spans = detected.queryExecution.executedPlan.collect {
-          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-            if w.toString.contains("tag_envo") => w
-        }
-        assert(spans.nonEmpty, s"dedupeTexts=$dedupe: injected tag_envo must " +
-          s"fuse:\n${detected.queryExecution.executedPlan}")
-        assertMemos(detected, if (dedupe) 1 else 0)
-        // same automaton -> same mentions as the default path
-        assert(detected.select("conv_id", "turn_idx").collect().map(_.toSeq).toSet === viaDefault)
-      }
+      val detected = graft.stages.MentionDetect.detect(spark, turns, dict = Some(bc))
+      assert(detected.count() > 0)
+      assertSharedMemo(detected)
+      // same automaton -> same mentions as the default path
+      assert(detected.select("conv_id", "turn_idx").collect().map(_.toSeq).toSet === viaDefault)
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

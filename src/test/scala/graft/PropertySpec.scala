@@ -46,17 +46,20 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  // `dedupeTexts = true` is the per-task memoized tagger (the in-task
-  // form of the reference's distinct-text rewrite); `false` tags every turn
-  test("physical-strategy invariance: distinct-rewrite and direct tagging agree") {
+  // the tagger's memo is per-task state (the in-task form of the
+  // reference's distinct-text rewrite): which texts share a task, and in
+  // what order they arrive, must not change a single mention
+  test("physical-strategy invariance: memoized tagging under repartition and row order") {
     val t = turnsDf(21L, 50)
-    def rows(df: DataFrame) = MentionDetect.explodeMentions(df)
+    def rows(df: DataFrame) = MentionDetect.explodeMentions(MentionDetect.detect(spark, df))
       .select("conv_id", "turn_idx", "mention_pos", "start", "end", "form")
       .collect().map(_.toSeq).toSet
-    val distinctPath = rows(MentionDetect.detect(spark, t, dedupeTexts = true))
-    val directPath = rows(MentionDetect.detect(spark, t, dedupeTexts = false))
-    assert(distinctPath === directPath)
-    assert(distinctPath.nonEmpty)
+    val base = rows(t)
+    assert(base.nonEmpty)
+    assert(rows(t.repartition(1)) === base, "one task holding every text")
+    assert(rows(t.repartition(17)) === base, "17 tasks")
+    assert(rows(t.orderBy(org.apache.spark.sql.functions.rand(3)).repartition(3)) === base,
+      "shuffled row order")
   }
 
   test("partitioning invariance: scores identical under repartition/shuffle") {

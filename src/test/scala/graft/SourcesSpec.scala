@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import graft.sources.{BioAdapter, Outfmt6}
 import graft.stages.Salting
 
-class SourcesSpec extends SparkSpec {
+class SourcesSpec extends CacheHygiene {
   import org.apache.spark.sql.functions._
   import spark.implicits._
 
@@ -113,8 +113,8 @@ class SourcesSpec extends SparkSpec {
     val isolationDim = Seq((1L, "Everglades wetlands"), (2L, "lake water"))
       .toDF("isokey", "source")
     val turns = BioAdapter.turnsFromHits(spark, hits, giDim, isolationDim)
-    val scores = new KgPipeline(spark, PipelineConfig(score = ScoreConfig("flat")))
-      .run(turns).scores.collect()
+    val scores = released(new KgPipeline(spark, PipelineConfig(score = ScoreConfig("flat")))
+      .run(turns))(_.scores.collect())
     val convs = scores.map(_.getString(0)).toSet
     assert(convs === Set("C1", "C2"), "LONG1 must be P8-filtered before scoring")
     assert(scores.nonEmpty)
@@ -156,7 +156,7 @@ class SourcesSpec extends SparkSpec {
     // and the turns drive the engine end to end
     val r = new KgPipeline(spark).run(
       graft.sources.JsonlTranscripts.turns(spark, s"$dir/t.jsonl").toDF)
-    assert(r.annotated.count() > 0)
+    assert(released(r)(_.annotated.count()) > 0)
   }
 
   test("P1 rename projection: C0-based aliases in stable order (reference enumerate)") {

@@ -43,12 +43,21 @@ class TagEnvoExprSpec extends SparkSpec {
   }
 
   /** idx -> spans of tag_envo over `text` (None for a NULL result). */
-  private def tagged(df: DataFrame, memo: Boolean): Map[Int, Option[Seq[Span]]] =
-    df.select(col("idx"), GraftFunctions.tag_envo(spark, col("text"), memo).as("m"))
+  private def tagged(df: DataFrame): Map[Int, Option[Seq[Span]]] =
+    df.select(col("idx"), GraftFunctions.tag_envo(spark, col("text")).as("m"))
       .collect().map { r =>
         r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getSeq[Row](1).map(s =>
           (s.getInt(0), s.getInt(1), s.getString(2), s.getSeq[Int](4)))))
       }.toMap
+
+  /** The spans of the un-memoized reference body, `TagEnvoMentions.evalWith`. */
+  private def evalWithSpans(text: String): Seq[Span] = {
+    val a = TagEnvoMentions.evalWith(KgPipeline.sharedAutomaton, UTF8String.fromString(text))
+    (0 until a.numElements()).map { i =>
+      val s = a.getStruct(i, 5)
+      (s.getInt(0), s.getInt(1), s.getUTF8String(2).toString, s.getArray(4).toIntArray().toSeq)
+    }
+  }
 
   /** Random-case, stoplisted, non-ASCII, boundary-heavy and empty texts. */
   private def randomTexts(rng: scala.util.Random, n: Int): Seq[String] = {
@@ -77,7 +86,7 @@ class TagEnvoExprSpec extends SparkSpec {
     try f finally conf.keys.foreach(spark.conf.unset)
   }
 
-  test("differential: memoized tag_envo, plain tag_envo and a naive substring tagger agree") {
+  test("differential: memoized tag_envo, evalWith and a naive substring tagger agree") {
     val rng = new scala.util.Random(2024)
     val base = randomTexts(rng, 600) ++ Seq("", null, null)
     // case variants whose spans differ (a stoplisted raw form beside its
@@ -104,18 +113,20 @@ class TagEnvoExprSpec extends SparkSpec {
     val big = frame(bigTexts, 1)
 
     for ((df, label) <- Seq(mixed -> "mixed", big -> "one oversized partition")) {
-      val expected = df.collect().map(r =>
-        r.getInt(0) -> Option(r.getString(1)).map(naiveTag)).toMap
+      val input = df.collect().map(r => r.getInt(0) -> Option(r.getString(1))).toMap
+      val expected = input.view.mapValues(_.map(naiveTag)).toMap
       assert(expected.values.exists(_.exists(_.nonEmpty)), s"$label: nothing tagged")
       assert(expected.values.exists(_.isEmpty) == (label == "mixed"), s"$label: NULL rows")
+      // the naive tagger and the un-memoized body agree before either
+      // judges the memo
+      val direct = input.view.mapValues(_.map(evalWithSpans)).toMap
+      assert(direct === expected, s"$label: evalWith against the naive tagger")
       for ((mode, conf) <- codegenModes) withConf(conf) {
-        for (memo <- Seq(false, true)) {
-          val got = tagged(df, memo)
-          val wrong = expected.keys.toSeq.sorted.filter(k => !got.get(k).contains(expected(k)))
-          assert(got.size == expected.size && wrong.isEmpty, s"$label, $mode, memo=$memo: " +
-            s"(idx, tag_envo, naive) ${wrong.take(3).map(k => (k, got.get(k), expected(k)))}")
-        }
-        val fused = df.select(GraftFunctions.tag_envo(spark, col("text"), memo = true))
+        val got = tagged(df)
+        val wrong = expected.keys.toSeq.sorted.filter(k => !got.get(k).contains(expected(k)))
+        assert(got.size == expected.size && wrong.isEmpty, s"$label, $mode: " +
+          s"(idx, tag_envo, naive) ${wrong.take(3).map(k => (k, got.get(k), expected(k)))}")
+        val fused = df.select(GraftFunctions.tag_envo(spark, col("text")))
           .queryExecution.executedPlan.collect {
             case w: org.apache.spark.sql.execution.WholeStageCodegenExec
               if w.toString.contains("tag_envo") => w
