@@ -14,57 +14,37 @@ final case class PipelineConfig(
     persistIntermediates: Boolean = true,
     /** Ignored; deleted once the benchmark stops passing it. */
     @deprecated("ignored: the tagger always memoizes per task", "0.1.0")
-    dedupeTexts: Boolean = true,
-    /** Ship the mention-provenance columns (start, end, form) through the
-      * SHARED frame on fused runs. Off (default), the one wide shuffle and
-      * the columnar cache carry only (conv_id, turn_idx, envo) — ~45% fewer
-      * row bytes, which is what the memory-bandwidth-bound high-core span
-      * pays for — and the canonical allTriples sink is unaffected (its
-      * mention rows never read the provenance columns). The full
-      * `mentionTriples` frame keeps its schema either way; with provenance
-      * off its standalone consumption re-derives from the un-shuffled
-      * tagger output instead of the shared cache. Set true when the run
-      * will MATERIALIZE the provenance sink alongside the others (e.g.
-      * RunKg writes mentions parquet with spans), so the tag-once sharing
-      * covers it. Non-fused runs always carry the full projection. */
-    mentionProvenance: Boolean = false)
+    dedupeTexts: Boolean = true)
 
 /** All pipeline outputs. The sink frames are lazy DataFrames (the
   * reference's pulled property-DAG, seqenv/analysis.py:148-159 via
   * seqenv/common/cache.py) over SHARED intermediates that run()
   * persists and materializes, so that their cached partitioning is visible
   * when the sink queries are planned (see KgPipeline.run). Release them
-  * with [[KgResult.unpersist]]. */
+  * with [[KgResult.unpersist]].
+  *
+  * `mentionTriples` carries the span provenance (form, start, end) and
+  * reads the un-shuffled tagger output; `allTriples` takes its mention rows
+  * off the conv_id partcache instead, which holds only the scorer's
+  * columns. Both give the same (subj, pred, obj, weight, evidence) rows. */
 final case class KgResult(
     turnMentions: DataFrame,   // (conv_id, turn_idx, tool, text_hash, mentions)
-    mentionRows: DataFrame,    // flattened per-mention rows
     scores: DataFrame,         // (conv_id, envo, score)
     annotated: DataFrame,      // annotated_with triples + evidence
-    mentionTriples: DataFrame, // mentions triples
+    mentionTriples: DataFrame, // mentions triples + span provenance
     coOccurrence: DataFrame,   // (envo_a, envo_b, n_convs)
     coOccurrenceTriples: DataFrame, // cooccurs_with triples (canonicalized)
     ontologyTriples: DataFrame,
+    /** annotated_with ∪ mentions in (subj, pred, obj, weight, evidence):
+      * the per-conversation families, the unit IncrementalKg stores. */
+    private[graft] val perConvTriples: DataFrame,
     /** Handles of the frames run() persisted for cross-branch sharing. */
-    private val sharedFrames: Seq[DataFrame] = Nil,
-    /** The mention rows allTriples unions — on thin fused runs this is the
-      * 5-column projection over the SHARED frame (so the canonical sink
-      * never re-tags), while `mentionTriples` above keeps the full
-      * provenance schema. Same canonical rows either way. */
-    private val mentionTriplesForUnion: Option[DataFrame] = None) {
+    private val sharedFrames: Seq[DataFrame] = Nil) {
 
   /** Every dynamic triple family in one (subj, pred, obj, weight, evidence)
     * frame — the canonical KG sink (one action materializes everything). */
-  def allTriples: DataFrame = {
-    val cols = Seq("subj", "pred", "obj", "weight", "evidence").map(org.apache.spark.sql.functions.col)
-    annotated.select(cols: _*)
-      .unionByName(mentionTriplesForUnion.getOrElse(mentionTriples).select(cols: _*))
-      .unionByName(coOccurrenceTriples.select(cols: _*))
-  }
-
-  /** The frame allTriples actually unions for the mention family —
-    * exposed so tests can pin the thin shared-frame shape. */
-  private[graft] def mentionTriplesUnionForTest: DataFrame =
-    mentionTriplesForUnion.getOrElse(mentionTriples)
+  def allTriples: DataFrame =
+    perConvTriples.unionByName(coOccurrenceTriples.select("subj", "pred", "obj", "weight", "evidence"))
 
   /** Release the shared caches run() created. Call after the sinks are
     * written: a long-lived session composing many pipelines would
@@ -77,10 +57,11 @@ final case class KgResult(
  * The transcript→EnvO KG builder. One dictionary + automaton per pipeline
  * instance, broadcast once per SparkSession.
  *
- * Dataflow: turns → MentionDetect (per-task memoized tagger) → LinkScore
- * (flat/ui/upui × proportional × backtracking × restrict) → Canonicalize →
- * TripleEmit (+ co-occurrence edges), each stage optionally checkpointed
- * with a lineage manifest for resume.
+ * Dataflow: turns → MentionDetect (per-task memoized tagger) → the conv_id
+ * partcache (`LinkScore.inputColumns` of the config, nothing else) →
+ * LinkScore (flat/ui/upui × proportional × backtracking × restrict) →
+ * Canonicalize → TripleEmit (+ co-occurrence edges), each stage optionally
+ * checkpointed with a lineage manifest for resume.
  */
 final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig(),
                        dictOverride: Option[EnvoDict] = None) {
@@ -141,6 +122,9 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
       java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8")).toString
     }
 
+  /** Builds the KG over `turns`. Persists and materializes the conv_id
+    * partcache and the scorer output before returning; the sink frames
+    * of the result are lazy over them. */
   def run(turns: DataFrame): KgResult = {
     val ckpt = cfg.checkpointDir
     val fp = fingerprint(turns)
@@ -151,30 +135,7 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     // the hot intermediate is the FLAT envo-occurrence projection — all
     // primitive columns, so the columnar cache build stays cheap (caching
     // the nested mentions array is ~10x slower)
-    val envoRows0full = MentionDetect.envoRows(turnMentions0)
-    val fusedApplies = LinkScore.supportsFused(cfg.score)
-    // Fused runs never read tool/text_hash/mention_pos (they exist for the
-    // ui/upui dedup keys): drop them BEFORE the shuffle + cache build —
-    // column pruning only thins reads, a cache materializes every column
-    // it was defined with, and the wide shuffle moves what it is given.
-    // Without mentionProvenance the canonical sinks also never read
-    // (start, end, form), so the shared frame narrows to three columns.
-    val fusedThin = fusedApplies && !cfg.mentionProvenance
-    val envoRows0 =
-      if (fusedThin)
-        envoRows0full.select(
-          org.apache.spark.sql.functions.col("conv_id"),
-          org.apache.spark.sql.functions.col("turn_idx"),
-          org.apache.spark.sql.functions.col("envo"))
-      else if (fusedApplies)
-        envoRows0full.select(
-          org.apache.spark.sql.functions.col("conv_id"),
-          org.apache.spark.sql.functions.col("turn_idx"),
-          org.apache.spark.sql.functions.col("start"),
-          org.apache.spark.sql.functions.col("end"),
-          org.apache.spark.sql.functions.col("form"),
-          org.apache.spark.sql.functions.col("envo"))
-      else envoRows0full
+    val envoRowsFull = MentionDetect.envoRows(turnMentions0)
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val shared = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def share(df: DataFrame): DataFrame = { shared += df; df }
@@ -203,7 +164,11 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     // near-free. SortExec preserves the HashPartitioning(conv_id) the
     // consumers plan against, and the sorted cache also satisfies the
     // window's required child ordering (conv_id prefix), eliding that sort.
-    val envoRows = share(envoRows0
+    // Only the scorer's columns go into the shuffle and the cache: column
+    // pruning only thins reads, a cache materializes every column it was
+    // defined with, and the wide shuffle moves what it is given.
+    val envoRows = share(envoRowsFull
+      .select(LinkScore.inputColumns(cfg.score).map(org.apache.spark.sql.functions.col): _*)
       .repartition(spark.sessionState.conf.numShufflePartitions,
         org.apache.spark.sql.functions.col("conv_id"))
       .sortWithinPartitions(
@@ -211,14 +176,13 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
         org.apache.spark.sql.functions.col("turn_idx"))
       .persist(disk))
     envoRows.count()
-    val mentionRows = MentionDetect.explodeMentions(turnMentions0)
 
     // Fused path (flat scoring): ONE aggregation yields score + evidence
     // together — no second pass over envoRows, no scores×support join.
     // Checkpointed, it commits as its own "fused" stage; annotated and
     // scores are projections of it.
     val fused: Option[DataFrame] =
-      if (fusedApplies) {
+      if (LinkScore.supportsFused(cfg.score)) {
         val f = share(Checkpoint.stage(spark, ckpt, "fused", fp) {
           LinkScore.scoreWithEvidence(spark, envoRows, cfg.score, cfg.evidenceCap)
         }.persist(disk))
@@ -247,17 +211,11 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
         TripleEmit.annotatedWith(spark, scores, envoRows, dict, cfg.evidenceCap)
       }
     }
-    // The mention branch is a pure projection — it needs no partitioning,
-    // and the shared frame gives it a free ride — except on thin fused
-    // runs, where the shared frame has no provenance columns: there the
-    // FULL mention frame re-derives from the un-shuffled tagger output,
-    // and the canonical sink unions a thin projection of the shared frame
-    // instead (mentionTriplesForUnion).
-    val mentionSource = if (fusedThin) envoRows0full else envoRows
-    val mentionTriples = TripleEmit.mentionTriples(spark, mentionSource, dict)
-    val mentionUnion =
-      if (fusedThin) Some(TripleEmit.mentionTriplesThin(spark, envoRows, dict))
-      else None
+    // the partcache holds no span columns, so the span-carrying mention
+    // frame reads the un-shuffled tagger output
+    val mentionTriples = TripleEmit.mentionTriples(spark, envoRowsFull, dict)
+    val perConvTriples = annotated.select("subj", "pred", "obj", "weight", "evidence")
+      .unionByName(TripleEmit.mentionTriplesThin(spark, envoRows, dict))
     val cooc = Checkpoint.stage(spark, ckpt, "cooccurrence", fp) {
       // scores is a (conv_id, envo) groupBy output — provably distinct
       TripleEmit.coOccurrence(scores, assumeDistinct = true)
@@ -265,15 +223,14 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
 
     KgResult(
       turnMentions = turnMentions0,
-      mentionRows = mentionRows,
       scores = scores,
       annotated = annotated,
       mentionTriples = mentionTriples,
       coOccurrence = cooc,
       coOccurrenceTriples = TripleEmit.coOccurrenceTriples(spark, cooc, dict),
       ontologyTriples = TripleEmit.ontologyTriples(spark, dict),
-      sharedFrames = shared.toSeq,
-      mentionTriplesForUnion = mentionUnion)
+      perConvTriples = perConvTriples,
+      sharedFrames = shared.toSeq)
   }
 }
 

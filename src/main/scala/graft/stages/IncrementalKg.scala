@@ -144,10 +144,7 @@ object IncrementalKg {
     }
 
     val r = pipe.run(fresh)
-    val cols = Seq("subj", "pred", "obj", "weight", "evidence").map(col)
-    val convTriples = r.annotated.select(cols: _*)
-      .unionByName(r.mentionTriplesUnionForTest.select(cols: _*))
-      .persist(disk)
+    val convTriples = r.perConvTriples.persist(disk)
     val nTriples = convTriples.count()
     convTriples.write.mode("overwrite").parquet(s"$indexDir/triples/batch=$batchNo")
 

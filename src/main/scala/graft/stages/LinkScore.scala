@@ -44,8 +44,8 @@ final case class ScoreConfig(
  */
 object LinkScore {
 
-  /** input: envoRows(conv_id, turn_idx, tool, text_hash, …, envo:int) —
-    * one row per envo occurrence (MentionDetect.envoRows)
+  /** input: envoRows with at least `inputColumns(cfg)` — one row per envo
+    * occurrence (MentionDetect.envoRows)
     * output: (conv_id, envo:int, score:double) */
   def score(spark: SparkSession, envoRows: DataFrame, dict: EnvoDict,
             cfg: ScoreConfig): DataFrame = {
@@ -175,6 +175,16 @@ object LinkScore {
     * evidence agg for this config. */
   def supportsFused(cfg: ScoreConfig): Boolean =
     cfg.normalization == "flat" && !cfg.backtracking && cfg.restrict.isEmpty
+
+  /** The envoRows columns that score, scoreWithEvidence and
+    * TripleEmit.annotatedWith read under this config — the columns the
+    * pipeline's conv_id partcache holds. Flat scoring reads the turn and
+    * the concept; ui adds the text key, upui also the tool. */
+  def inputColumns(cfg: ScoreConfig): Seq[String] = cfg.normalization match {
+    case "flat" => Seq("conv_id", "turn_idx", "envo")
+    case "ui" => Seq("conv_id", "turn_idx", "text_hash", "envo")
+    case "upui" => Seq("conv_id", "turn_idx", "tool", "text_hash", "envo")
+  }
 
   private def keepFirstPerText(envoRows: DataFrame): DataFrame =
     keepFirst(envoRows.filter(col("conv_id").isNotNull && col("text_hash").isNotNull &&

@@ -59,36 +59,21 @@ object MentionDetect {
       .filter(size(col("mentions")) > 0)
   }
 
-  /** Flatten to one row per mention (for the `mentions` triple sink and
-    * evidence tables). */
-  def explodeMentions(turnMentions: DataFrame): DataFrame =
-    turnMentions
-      .select(col("conv_id"), col("turn_idx"),
-        posexplode(col("mentions")).as(Seq("mention_pos", "m")))
-      .select(col("conv_id"), col("turn_idx"), col("mention_pos"),
-        col("m.start").as("start"), col("m.end").as("end"),
-        col("m.form").as("form"), col("m.serials").as("serials"),
-        col("m.envos").as("envos"))
-
   /** THE hot intermediate: one row per envo occurrence, all-primitive
     * columns — (conv_id, turn_idx, tool, text_hash, mention_pos, start,
     * end, form, envo). Primitive columns make the columnar cache build
-    * ~10× cheaper than persisting the nested mentions array, and every
-    * downstream stage (scorer, triple sinks, evidence) reads this one
-    * projection. The envo-occurrence granularity is the analog of one
-    * decoded GI envo tuple element (seqenv/analysis.py:357). */
-  def envoRows(turnMentions: DataFrame): DataFrame =
-    explodeMentionsWithMeta(turnMentions)
-      .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
-        col("mention_pos"), col("start"), col("end"), col("form"),
-        explode(col("envos")).as("envo"))
-
-  private def explodeMentionsWithMeta(turnMentions: DataFrame): DataFrame =
+    * ~10× cheaper than persisting the nested mentions array. The pipeline
+    * caches only the scorer's columns of it (LinkScore.inputColumns) and
+    * reads the span columns off the un-shuffled frame. The envo-occurrence
+    * granularity is the analog of one decoded GI envo tuple element
+    * (seqenv/analysis.py:357). */
+  def envoRows(turnMentions: DataFrame): DataFrame = {
+    val keys = Seq("conv_id", "turn_idx", "tool", "text_hash").map(col)
+    val span = Seq("mention_pos", "start", "end", "form").map(col)
     turnMentions
-      .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
-        posexplode(col("mentions")).as(Seq("mention_pos", "m")))
-      .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
-        col("mention_pos"),
-        col("m.start").as("start"), col("m.end").as("end"),
-        col("m.form").as("form"), col("m.envos").as("envos"))
+      .select(keys :+ posexplode(col("mentions")).as(Seq("mention_pos", "m")): _*)
+      .select(keys ++ Seq(col("mention_pos"), col("m.start").as("start"), col("m.end").as("end"),
+        col("m.form").as("form"), col("m.envos").as("envos")): _*)
+      .select(keys ++ span :+ explode(col("envos")).as("envo"): _*)
+  }
 }

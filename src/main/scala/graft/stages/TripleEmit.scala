@@ -106,9 +106,9 @@ object TripleEmit {
 
   /** The canonical-sink projection of the mention family: same
     * (subj, pred, obj, weight, evidence) rows as `mentionTriples`, built
-    * from a frame that carries only (conv_id, turn_idx, envo) — the shape
-    * thin fused runs share through the one wide shuffle. Span provenance
-    * (start, end, form) is intentionally absent: allTriples never reads it. */
+    * from (conv_id, turn_idx, envo) alone — columns the pipeline's conv_id
+    * partcache holds on every config. Span provenance (start, end, form)
+    * is intentionally absent: allTriples never reads it. */
   def mentionTriplesThin(spark: SparkSession, envoRows: DataFrame, dict: EnvoDict): DataFrame =
     Canonicalize.canonicalize(
       spark,

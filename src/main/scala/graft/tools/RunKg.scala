@@ -23,12 +23,8 @@ object RunKg {
 
     val spark = Sessions.local(cores, shufflePartitions = 32, appName = "graft-runkg")
     val turns = TranscriptGen.generate(spark, nConvs)
-    // Four sinks materialize off run()'s shared tagger output; keep the
-    // provenance columns in the shared frame because the mentions sink
-    // here DOES write the spans (the one case mentionProvenance is for).
     val pipe = new KgPipeline(spark,
-      PipelineConfig(score = ScoreConfig(norm, proportional, backtracking),
-        mentionProvenance = true))
+      PipelineConfig(score = ScoreConfig(norm, proportional, backtracking)))
     val result = pipe.run(turns.toDF)
 
     result.annotated.write.mode("overwrite").parquet(s"$outDir/annotated_with")

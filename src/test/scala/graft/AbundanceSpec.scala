@@ -6,7 +6,7 @@ import graft.stages.Abundance
 
 /** Matmul-alignment and pivot semantics mirroring the reference's
   * tests/mat_mul.py:20-28 and outputs.py:53-86. */
-class AbundanceSpec extends SparkSpec {
+class AbundanceSpec extends CacheHygiene {
   import spark.implicits._
 
   private val abundance = Seq(

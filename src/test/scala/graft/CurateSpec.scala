@@ -11,7 +11,7 @@ import graft.tools.CurateCli.CurateConfig
 
 /** The end-to-end curation funnel: monotone, deterministic, and each gate
   * provably bites on the driver testdata. */
-class CurateSpec extends SparkSpec {
+class CurateSpec extends CacheHygiene {
   private val dir = "/root/testdata/sf0.001"
 
   /** Leaves of an executed plan. AdaptiveSparkPlanExec is itself a

@@ -6,7 +6,7 @@ import graft.stages.DimBuild
   * post-test round-trip (add_tagger_results.py:195-249): build the dims
   * from a raw table, then resolve sample GIs back to (source, envos) and
   * compare against independent tagging. */
-class DimBuildSpec extends SparkSpec {
+class DimBuildSpec extends CacheHygiene {
   import spark.implicits._
 
   // raw `data` analog: duplicate GIs, duplicate sources, a matchless

@@ -175,36 +175,37 @@ class PipelineSpec extends CacheHygiene {
     assert(fullRun.contains("ENVO:01000001"), "full dict must still tag mud")
   }
 
-  test("thin fused run: canonical triples identical, shared frame 3 columns wide") {
+  test("partcache holds exactly LinkScore.inputColumns on every ScoreConfig") {
+    // the conv_id partcache carries the scorer's columns and nothing else;
+    // allTriples takes its mention rows off it, while mentionTriples keeps
+    // the span provenance by reading the un-shuffled tagger output
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.stages.{LinkScore, ScoreConfig}
     val turns = graft.synth.TranscriptGen.generate(spark, 40).toDF
-    def tripleSet(cfg: PipelineConfig) = released(new KgPipeline(spark, cfg).run(turns)) { r =>
-      val rows = r.allTriples.collect()
-        .map(x => (x.getString(0), x.getString(1), x.getString(2), x.getDouble(3), x.getLong(4)))
-        .toSet
-      val mentions = r.mentionTriples
-        .select("subj", "obj", "form", "start", "end").collect()
-        .map(x => (x.getString(0), x.getString(1), x.getString(2), x.getInt(3), x.getInt(4)))
-        .toSet
-      (rows, mentions)
-    }
-    val (thinAll, thinMentions) = tripleSet(PipelineConfig())
-    val (provAll, provMentions) = tripleSet(PipelineConfig(mentionProvenance = true))
-    assert(thinAll === provAll, "canonical sink must not depend on mentionProvenance")
-    assert(thinMentions === provMentions,
-      "the full provenance frame must be schema- and row-identical on thin runs")
-
-    // the thin run's wide shuffle + cache must carry exactly 3 columns
-    released(new KgPipeline(spark).run(turns)) { rThin =>
-      val cached = rThin.scores.queryExecution.optimizedPlan.collect {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m.output.map(_.name)
+    val ckpt = Some(java.nio.file.Files.createTempDirectory("graft-partcache").toString)
+    val configs = Seq(
+      "flat" -> PipelineConfig(),
+      "flat + backtracking" -> PipelineConfig(score = ScoreConfig(backtracking = true)),
+      "upui + backtracking, checkpointed" -> PipelineConfig(checkpointDir = ckpt,
+        score = ScoreConfig("upui", backtracking = true)))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    for ((name, cfg) <- configs) released(new KgPipeline(spark, cfg).run(turns)) { r =>
+      val mentionRows = r.allTriples.filter($"pred" === "mentions")
+      val cached = mentionRows.queryExecution.optimizedPlan.collect {
+        case m: InMemoryRelation => m.output.map(_.name)
       }
-      // scores reads the fused cache whose input is the envoRows cache; find
-      // the envoRows one (it carries turn_idx) and pin its width
-      val envoCached = rThin.mentionTriplesUnionForTest.queryExecution.optimizedPlan.collect {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m.output.map(_.name)
-      }
-      assert(envoCached.exists(_.toSet == Set("conv_id", "turn_idx", "envo")),
-        s"thin shared frame must be (conv_id, turn_idx, envo), got $envoCached / $cached")
+      assert(cached === Seq(LinkScore.inputColumns(cfg.score)),
+        s"$name: the mention rows must read the partcache of the scorer's columns")
+      val full = r.mentionTriples
+      assert(Set("form", "start", "end").subsetOf(full.columns.toSet),
+        s"$name: mentionTriples lost its span provenance: ${full.columns.mkString(",")}")
+      val expected = sorted(full.select("subj", "pred", "obj", "weight", "evidence"))
+      assert(expected.nonEmpty, s"$name: no mentions")
+      assert(sorted(mentionRows) === expected,
+        s"$name: allTriples' mention rows differ from mentionTriples")
+      assert(full.filter($"form".isNull || $"start" >= $"end").isEmpty,
+        s"$name: malformed spans")
     }
   }
 

@@ -7,7 +7,7 @@ import graft.synth.TranscriptGen
 /** Property tests over seeded random transcript tables (deterministic
   * generators — SURVEY §5): normalization dominance, proportional-sum,
   * partitioning invariance, span invariants. */
-class PropertySpec extends SparkSpec {
+class PropertySpec extends CacheHygiene {
   import spark.implicits._
 
   private def scores(turns: DataFrame, cfg: ScoreConfig): Map[(String, Int), Double] = {
@@ -51,7 +51,7 @@ class PropertySpec extends SparkSpec {
   // what order they arrive, must not change a single mention
   test("physical-strategy invariance: memoized tagging under repartition and row order") {
     val t = turnsDf(21L, 50)
-    def rows(df: DataFrame) = MentionDetect.explodeMentions(MentionDetect.detect(spark, df))
+    def rows(df: DataFrame) = MentionDetect.envoRows(MentionDetect.detect(spark, df))
       .select("conv_id", "turn_idx", "mention_pos", "start", "end", "form")
       .collect().map(_.toSeq).toSet
     val base = rows(t)

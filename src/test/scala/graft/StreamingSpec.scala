@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.model.Turn
 import graft.streaming.StreamingMentions
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends CacheHygiene {
   import spark.implicits._
 
   private def turn(conv: String, idx: Int, text: String, tsMin: Int) =

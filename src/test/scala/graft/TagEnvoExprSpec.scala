@@ -7,7 +7,7 @@ import graft.functions.{GraftFunctions, TagEnvoMemo, TagEnvoMentions}
 
 /** The native tag_envo Catalyst expression: Column API, SQL registration,
   * null safety, agreement with the automaton, and its per-task memo. */
-class TagEnvoExprSpec extends SparkSpec {
+class TagEnvoExprSpec extends CacheHygiene {
   import spark.implicits._
 
   private type Span = (Int, Int, String, Seq[Int])
