@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
  * SMALLEST distinct int values of the group, ascending — the bounded
  * replacement for `slice(sort_array(collect_set(x)), 1, k)`.
  *
- * Why it exists: the evidence turn-sample contract
- * ([[graft.stages.TripleEmit.annotatedWith]]) is "count exact, list
+ * Why it exists: the evidence turn-sample contract (the one evidence
+ * aggregation, [[graft.stages.LinkScore.evidence]]) is "count exact, list
  * bounded" because an uncapped collect_set buffers EVERY distinct turn of
  * a mega-conversation in executor memory before the slice throws the
  * excess away — the slice caps the OUTPUT, not the aggregation state. This

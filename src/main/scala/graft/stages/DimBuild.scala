@@ -23,8 +23,8 @@ case class BuiltDims(isolationDim: DataFrame, giDim: DataFrame, dataView: DataFr
  *  - isolation AUTOINCREMENT id ≈ rank in first-appearance order — a
  *    distributed sort + zipWithIndex, NOT a single-partition window
  *    (first_seen = min rowid is unique per source, so the order is total);
- *  - STEP 5: uniquify GIs keep-min-rowid — agg + join-back
- *    (Salting.keepFirstByAgg), skew-proof;
+ *  - STEP 5: uniquify GIs keep-min-rowid — the scorer's keep-first
+ *    (LinkScore.keepFirst, a streaming top-1 window), skew-proof;
  *  - STEP 6: gi(gi, isokey, pubmed) via the source-text join — GIs whose
  *    source never matched drop out, as in the reference;
  *  - the final `data` VIEW (gi ⋈ isolation) as a composable DataFrame.
@@ -48,8 +48,8 @@ object DimBuild {
         schema)
       .select(col("isokey"), col("source"), col("envos"))
 
-    val uniq = Salting.keepFirstByAgg(
-      cut.select("gi", "source", "pubmed", "row_order"), Seq("gi"), "row_order")
+    val uniq = LinkScore.keepFirst(
+      cut.select("gi", "source", "pubmed", "row_order"), col("row_order"), col("gi"))
 
     val giDim = uniq
       .join(isolationDim.select("isokey", "source"), "source")

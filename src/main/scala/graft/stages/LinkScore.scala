@@ -50,20 +50,14 @@ object LinkScore {
   def score(spark: SparkSession, envoRows: DataFrame, dict: EnvoDict,
             cfg: ScoreConfig): DataFrame = {
 
-    // --- normalization: choose the surviving TURNS. keep-first is a
-    //     `rank() = 1` filter over a window ordered by turn_idx: the
-    //     optimizer turns it into a WindowGroupLimit, a streaming top-1
-    //     over the sorted input, so the window never buffers a conversation
-    //     that repeats one text millions of times. Over the conv_id-
-    //     partitioned partcache every window is partition-local (no
-    //     exchange, no self-join, one scan); over an un-partitioned input
-    //     the Partial WindowGroupLimit runs before the exchange and absorbs
-    //     repeats map-side. rank (not row_number) keeps every row of the
-    //     first turn — all envo occurrences, and turn_idx ties.
-    //     Duplicate texts carry identical envo multisets, so keeping the
-    //     min-turn representative is equivalent to the reference's
-    //     set-of-isokeys / keep-first semantics. Rows with a NULL key are
-    //     dropped (a NULL never names a first turn).
+    // --- normalization: choose the surviving TURNS with keepFirst ordered
+    //     by turn_idx. Over the conv_id-partitioned partcache every window
+    //     is partition-local (no exchange, no self-join, one scan). rank
+    //     (not row_number) keeps every row of the first turn — all envo
+    //     occurrences, and turn_idx ties. Duplicate texts carry identical
+    //     envo multisets, so keeping the min-turn representative is
+    //     equivalent to the reference's set-of-isokeys / keep-first
+    //     semantics.
     //     Hash-width note: dedup keys on the 64-bit text_hash WITHOUT the
     //     text. Unlike the tagger's memo (birthday paradox over ALL
     //     distinct texts of a task — it keys on the full text bytes),
@@ -78,9 +72,10 @@ object LinkScore {
       case "upui" =>
         // tool-dedup keeps the first turn per (conv, tool) among text-
         // survivors; null-tool rows all bypass (seqenv/analysis.py:391-392):
-        // each turn's null-tool rows form a group of their own
-        keepFirst(keepFirstPerText(envoRows),
-          col("conv_id"), col("tool"), when(col("tool").isNull, col("turn_idx")))
+        // each turn's null-tool rows form a group of their own — the key is
+        // the tool, or for a null tool the turn (a struct is never NULL)
+        keepFirst(keepFirstPerText(envoRows), col("turn_idx"), col("conv_id"),
+          struct(col("tool"), when(col("tool").isNull, col("turn_idx"))))
     }
 
     // --- envo occurrences (duplicates within a turn kept) ---
@@ -126,9 +121,38 @@ object LinkScore {
     }
   }
 
-  /** Fused flat scoring + evidence: ONE aggregation over envoRows computes
-    * the occurrence count, the distinct supporting-turn count (A10), and
-    * the bounded turn sample together, so the pipeline's annotated_with
+  /** The evidence aggregation, ONE for every config: per (conv, envo) the
+    * occurrence count, the supporting-turn count (A10) and the bounded turn
+    * sample. `scoreWithEvidence` scores off it; `TripleEmit.annotatedWith`
+    * joins it onto the scores.
+    *
+    * Explicit two-level shape instead of countDistinct: mixing a distinct
+    * agg with bounded_min_set makes Spark evaluate EVERY agg at the
+    * distinct-key grain through non-codegen ObjectHashAggregate passes
+    * plus an extra (conv, envo, turn) exchange (measured +60% pipeline
+    * CPU). Level 1 collapses to distinct turns with a codegen'd count;
+    * level 2 derives occ (sum), n_turns (count of the non-NULL turns — a
+    * NULL turn_idx names no supporting turn) and the bounded turn sample
+    * (distinct-min-k — identical on deduped input). Under a conv_id-
+    * partitioned input BOTH levels plan partition-local (every grouping
+    * key is conv_id-prefixed).
+    *
+    * output: (conv_id, envo:int, occ:long, n_turns:long,
+    * turn_sample:array<int>) */
+  def evidence(spark: SparkSession, envoRows: DataFrame, evidenceCap: Int): DataFrame =
+    envoRows
+      .select(col("conv_id"), col("envo"), col("turn_idx"))
+      .groupBy("conv_id", "envo", "turn_idx")
+      .agg(count(lit(1)).as("occ_t"))
+      .groupBy("conv_id", "envo")
+      .agg(
+        sum("occ_t").as("occ"),
+        count("turn_idx").as("n_turns"),
+        graft.functions.GraftFunctions.bounded_min_set(spark, col("turn_idx"), evidenceCap)
+          .as("turn_sample"))
+
+  /** Fused flat scoring + evidence: the evidence aggregation's occurrence
+    * count IS the flat score's count, so the pipeline's annotated_with
     * branch needs neither a second full pass over the occurrence rows nor
     * the scores×support join-back (measured: that join was a SortMergeJoin
     * re-shuffling both sides at the bench corpus). Only valid when the
@@ -141,34 +165,14 @@ object LinkScore {
   def scoreWithEvidence(spark: SparkSession, envoRows: DataFrame,
                         cfg: ScoreConfig, evidenceCap: Int): DataFrame = {
     require(supportsFused(cfg), s"fused scoring requires flat/no-backtracking/no-restrict, got $cfg")
-    // Explicit two-level shape instead of countDistinct: mixing a distinct
-    // agg with bounded_min_set makes Spark evaluate EVERY agg at the
-    // distinct-key grain through non-codegen ObjectHashAggregate passes
-    // plus an extra (conv, envo, turn) exchange (measured +60% pipeline
-    // CPU). Level 1 collapses to distinct turns with a codegen'd count;
-    // level 2 derives occ (sum), n_turns (count of distinct-turn rows) and
-    // the bounded turn sample (distinct-min-k — identical on deduped
-    // input). Under a conv_id-partitioned input BOTH levels plan
-    // partition-local (every grouping key is conv_id-prefixed).
-    val perTurn = envoRows
-      .select(col("conv_id"), col("envo"), col("turn_idx"))
-      .groupBy("conv_id", "envo", "turn_idx")
-      .agg(count(lit(1)).as("occ_t"))
-    val agg = perTurn
-      .groupBy("conv_id", "envo")
-      .agg(
-        sum("occ_t").as("occ"),
-        count(lit(1)).as("n_turns"),
-        graft.functions.GraftFunctions.bounded_min_set(spark, col("turn_idx"), evidenceCap)
-          .as("turn_sample"))
     val score =
       if (cfg.proportional) {
         // same bounded window-sum as score() — ≤|EnvO| rows per conv
         val w = Window.partitionBy("conv_id")
         col("occ").cast("double") / sum("occ").over(w)
       } else col("occ").cast("double")
-    agg.select(col("conv_id"), col("envo"), score.as("score"),
-      col("n_turns"), col("turn_sample"))
+    evidence(spark, envoRows, evidenceCap).select(col("conv_id"), col("envo"),
+      score.as("score"), col("n_turns"), col("turn_sample"))
   }
 
   /** Whether `scoreWithEvidence` computes the same rows as score() + the
@@ -187,13 +191,24 @@ object LinkScore {
   }
 
   private def keepFirstPerText(envoRows: DataFrame): DataFrame =
-    keepFirst(envoRows.filter(col("conv_id").isNotNull && col("text_hash").isNotNull &&
-      col("turn_idx").isNotNull), col("conv_id"), col("text_hash"))
+    keepFirst(envoRows, col("turn_idx"), col("conv_id"), col("text_hash"))
 
-  /** Rows whose turn_idx is the minimum of their `keys` group. */
-  private def keepFirst(df: DataFrame, keys: Column*): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(col("turn_idx"))
-    df.withColumn("_first", rank().over(w)).filter(col("_first") === 1).drop("_first")
+  /** Keep-first, the ONE implementation (the scorer's ui/upui dedupes and
+    * DimBuild's per-gi uniquify): the rows whose `order` value is the
+    * minimum of their `keys` group, ties all kept. Rows with a NULL key or
+    * a NULL order value are dropped — a NULL never names a first row.
+    *
+    * A `rank() = 1` filter over a window ordered by `order`: the optimizer
+    * turns it into a WindowGroupLimit, a streaming top-1 over the sorted
+    * input, so the window never buffers a group that repeats one key
+    * millions of times, and over an input not partitioned by the keys the
+    * Partial WindowGroupLimit runs before the exchange and absorbs repeats
+    * map-side like a partial agg. No agg + join-back, so a hot key is
+    * never joined back onto itself. */
+  private[graft] def keepFirst(df: DataFrame, order: Column, keys: Column*): DataFrame = {
+    val w = Window.partitionBy(keys: _*).orderBy(order)
+    df.filter((keys :+ order).map(_.isNotNull).reduce(_ && _))
+      .withColumn("_first", rank().over(w)).filter(col("_first") === 1).drop("_first")
   }
 
   /** The ancestor-closure dim as a tiny broadcastable DataFrame

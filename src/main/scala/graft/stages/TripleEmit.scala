@@ -43,39 +43,19 @@ object TripleEmit {
   }
 
   /** scores(conv_id, envo, score) × concept dim -> annotated_with triples
-    * with exact supporting-turn counts from the envo-occurrence rows. */
+    * with exact supporting-turn counts: the scores left-joined to the one
+    * evidence aggregation (LinkScore.evidence). A scored concept no
+    * occurrence row supports (a backtracking ancestor) gets evidence 0 and
+    * a NULL sample. */
   def annotatedWith(spark: SparkSession, scores: DataFrame, envoRows: DataFrame,
                     dict: EnvoDict, evidenceCap: Int = 20): DataFrame = {
-    // support: per (conv, envo) — distinct supporting turns (A10 analog).
-    // The sample uses the BOUNDED min-k aggregate, not
-    // slice(sort_array(collect_set(...))): the slice caps only the OUTPUT,
-    // while collect_set's buffer still accumulates every distinct turn of
-    // a mega-conversation before the slice discards them — O(cap) state
-    // per group is the contract the scaladoc above promises. Same values.
-    val support = envoRows
-      .select(col("conv_id"), col("envo"), col("turn_idx"))
-      .groupBy("conv_id", "envo")
-      .agg(
-        countDistinct("turn_idx").as("n_turns"),
-        graft.functions.GraftFunctions.bounded_min_set(spark, col("turn_idx"), evidenceCap)
-          .as("turn_sample"))
-    Canonicalize.canonicalize(spark, scores.join(support, Seq("conv_id", "envo"), "left"), dict)
-      .select(
-        col("conv_id").as("subj"),
-        lit(PredAnnotated).as("pred"),
-        col("curie").as("obj"),
-        col("score").as("weight"),
-        coalesce(col("n_turns"), lit(0L)).as("evidence"),
-        col("name"),
-        col("turn_sample"))
+    val support = LinkScore.evidence(spark, envoRows, evidenceCap)
+    annotatedFromFused(spark, scores.join(support, Seq("conv_id", "envo"), "left"), dict)
   }
 
-  /** annotated_with triples from the FUSED score+evidence frame
-    * (LinkScore.scoreWithEvidence) — same columns and rows as
-    * annotatedWith for every config the fused scorer supports: flat
-    * scoring makes the scores and support key sets identical, so the
-    * classic left join degenerates to this projection and n_turns is
-    * never NULL. */
+  /** annotated_with triples from a (conv_id, envo, score, n_turns,
+    * turn_sample) frame — the FUSED scorer's output
+    * (LinkScore.scoreWithEvidence) as is, or annotatedWith's join. */
   def annotatedFromFused(spark: SparkSession, fused: DataFrame, dict: EnvoDict): DataFrame =
     Canonicalize.canonicalize(spark, fused, dict)
       .select(
@@ -83,7 +63,7 @@ object TripleEmit {
         lit(PredAnnotated).as("pred"),
         col("curie").as("obj"),
         col("score").as("weight"),
-        col("n_turns").as("evidence"),
+        coalesce(col("n_turns"), lit(0L)).as("evidence"),
         col("name"),
         col("turn_sample"))
 

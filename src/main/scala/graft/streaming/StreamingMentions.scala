@@ -48,23 +48,21 @@ final case class BucketState(seen: Map[Long, Long], order: Seq[Long],
  * concept counts with watermarked late-data handling, and incremental
  * per-conversation link scores via mapGroupsWithState.
  *
- * Note on the distinct-text rewrite: within a micro-batch the tagger still
- * runs per-row (cross-batch dedup would need unbounded state); the batched
- * automaton is compute-cheap enough that streaming favors simplicity.
+ * Tagging is the batch tagger itself: the `tag_envo` expression in a
+ * projection, whose per-task memo tags a text repeated within a
+ * micro-batch task once (cross-batch dedup would need unbounded state).
  */
 object StreamingMentions {
 
-  /** turns stream → mention occurrence stream (one row per turn×concept). */
+  /** turns stream → mention occurrence stream (one row per turn×concept,
+    * in document order within a turn). */
   def mentionStream(spark: SparkSession, turns: Dataset[Turn],
                     ac: Broadcast[AhoCorasick]): Dataset[StreamMention] = {
     import spark.implicits._
-    turns.mapPartitions { iter =>
-      val automaton = ac.value
-      iter.flatMap { t =>
-        automaton.tag(t.text).iterator.flatMap(_.envos.iterator)
-          .map(e => StreamMention(t.conv_id, t.turn_idx, t.ts, e))
-      }
-    }
+    val mentions = graft.functions.GraftFunctions.tag_envo_with(spark, ac, col("text"))
+    turns.select(col("conv_id"), col("turn_idx"), col("ts"),
+        explode(flatten(mentions.getField("envos"))).as("envo"))
+      .as[StreamMention]
   }
 
   /** Watermarked tumbling-window concept counts — the streaming analog of

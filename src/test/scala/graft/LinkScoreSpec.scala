@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import graft.model.Turn
-import graft.stages.{LinkScore, MentionDetect, ScoreConfig}
+import graft.stages.{LinkScore, MentionDetect, ScoreConfig, TripleEmit}
 
 /** FIXTURES.md §4 scoring fixtures, mirroring documentation/frequencies.png
   * and seqenv/analysis.py:338-408.
@@ -126,31 +126,48 @@ class LinkScoreSpec extends CacheHygiene {
 
   test("fused scoreWithEvidence == classic score + evidence agg, row for row") {
     import org.apache.spark.sql.functions._
-    // the fused path is the plan under the o2/o6/o10/o12 hashes — its rows
-    // must be IDENTICAL to the classic composition for every flat config
+    // annotated_with rows on both scorer paths — the fused flat scorer (the
+    // plan under the o2/o6/o10/o12 hashes) and annotatedWith's scores ⋈
+    // evidence — must equal the classic score left-joined to a
+    // countDistinct evidence reference, for every config. A NULL turn_idx
+    // (any parquet input can carry one) counts as an occurrence, never as
+    // a supporting turn.
     val turns = miniTurns ++ Seq(
       turn("c2", 0, "lake mud of the lake", None),
       turn("c2", 5, "marine wetland", Some("t1")),
       turn("c2", 9, "marine wetland", Some("t1")))
-    val pipeline = new KgPipeline(spark)
-    val rows = MentionDetect.envoRows(MentionDetect.detect(spark, turns.toDS.toDF))
-    for (proportional <- Seq(true, false)) {
-      val cfg = ScoreConfig(normalization = "flat", proportional = proportional)
-      val fused = LinkScore.scoreWithEvidence(spark, rows, cfg, evidenceCap = 2)
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getDouble(2), r.getLong(3), r.getSeq[Int](4).toList))).toMap
-      val classicScores = LinkScore.score(spark, rows, pipeline.dict, cfg)
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
-      val classicSupport = rows.groupBy("conv_id", "envo")
-        .agg(countDistinct("turn_idx").as("n"),
-          graft.functions.GraftFunctions.bounded_min_set(spark, col("turn_idx"), 2).as("ts"))
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getLong(2), r.getSeq[Int](3).toList))).toMap
-      assert(fused.keySet === classicScores.keySet)
-      fused.foreach { case (k, (score, nTurns, sample)) =>
-        assert(score === classicScores(k), s"score mismatch at $k")
-        assert((nTurns, sample) === classicSupport(k), s"evidence mismatch at $k")
-      }
+    val dict = KgPipeline.sharedDict
+    val tagged = MentionDetect.envoRows(MentionDetect.detect(spark, turns.toDS.toDF))
+    val rows = tagged.unionByName(tagged.filter($"conv_id" === "c2" && $"turn_idx" === 0)
+      .withColumn("turn_idx", lit(null).cast("int")))
+    val support = rows.groupBy("conv_id", "envo")
+      .agg(countDistinct("turn_idx").as("n"),
+        graft.functions.GraftFunctions.bounded_min_set(spark, col("turn_idx"), 2).as("ts"))
+      .collect().map(r => (r.getString(0), r.getInt(1)) ->
+        ((r.getLong(2), r.getSeq[Int](3).toList))).toMap
+    for (cfg <- Seq(
+        ScoreConfig("flat", proportional = true), ScoreConfig("flat", proportional = false),
+        ScoreConfig("ui"), ScoreConfig("upui"), ScoreConfig("flat", backtracking = true),
+        ScoreConfig("upui", backtracking = true))) {
+      val scores = LinkScore.score(spark, rows, dict, cfg)
+      // a scored concept without support (a backtracking ancestor) carries
+      // evidence 0 and no sample
+      val expected = scores.collect().toSeq.flatMap { r =>
+        val (conv, envo) = (r.getString(0), r.getInt(1))
+        val (n, sample) = support.get((conv, envo)).fold((0L, "null"))(s => (s._1, s._2.toString))
+        dict.intToCurie.get(envo).map(curie => (conv, curie, r.getDouble(2), n, sample))
+      }.sortBy(_.toString)
+      val annotated =
+        if (LinkScore.supportsFused(cfg))
+          TripleEmit.annotatedFromFused(spark, LinkScore.scoreWithEvidence(spark, rows, cfg, 2), dict)
+        else TripleEmit.annotatedWith(spark, scores, rows, dict, 2)
+      val got = annotated.collect().toSeq.map { r =>
+        (r.getAs[String]("subj"), r.getAs[String]("obj"), r.getAs[Double]("weight"),
+          r.getAs[Long]("evidence"),
+          Option(r.getAs[scala.collection.Seq[Int]]("turn_sample")).fold("null")(_.toList.toString))
+      }.sortBy(_.toString)
+      assert(expected.nonEmpty, s"$cfg scored nothing")
+      assert(got === expected, s"$cfg")
     }
     // non-flat configs must refuse the fused path loudly
     intercept[IllegalArgumentException] {

@@ -414,6 +414,40 @@ class PlanShapeSpec extends CacheHygiene {
     }
   }
 
+  test("upui + backtracking annotated: one evidence aggregation keyed (conv_id, envo), no distinct agg") {
+    // annotatedWith joins the one two-level evidence aggregation onto the
+    // scores: a codegen'd per-turn count, then ONE ObjectHashAggregate
+    // level (bounded_min_set) keyed by (conv_id, envo). A countDistinct
+    // beside bounded_min_set would plan every agg at the (conv_id, envo,
+    // turn_idx) grain through extra non-codegen ObjectHashAggregates.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec => Seq(s)
+      case n => n +: n.children.flatMap(walk)
+    }
+    val turns = graft.synth.TranscriptGen.generate(spark, 200).toDF
+    val cfg = graft.stages.ScoreConfig("upui", proportional = true, backtracking = true)
+    released(new KgPipeline(spark, PipelineConfig(score = cfg)).run(turns)) { r =>
+      val executed = r.annotated.queryExecution.executedPlan
+      val nodes = walk(executed)
+      val objectAggs = nodes.collect { case a: ObjectHashAggregateExec => a }
+      assert(objectAggs.nonEmpty, s"the turn sample is an ObjectHashAggregate:\n$executed")
+      objectAggs.foreach { a =>
+        assert(a.groupingExpressions.map(_.name) === Seq("conv_id", "envo"),
+          s"every ObjectHashAggregate groups by (conv_id, envo):\n$executed")
+      }
+      val distinct = nodes.collect { case a: BaseAggregateExec => a }
+        .filter(_.aggregateExpressions.exists(_.isDistinct))
+      assert(distinct.isEmpty, s"no distinct aggregate:\n$executed")
+      assert(!executed.toString.contains("count(distinct"), s"no count(distinct:\n$executed")
+    }
+  }
+
   test("vec_dot is whole-stage-codegen'd, not a fallback") {
     import org.apache.spark.sql.functions.{col, sum}
     val e = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import graft.sources.{BioAdapter, Outfmt6}
-import graft.stages.Salting
 
 class SourcesSpec extends CacheHygiene {
   import org.apache.spark.sql.functions._
@@ -166,22 +165,23 @@ class SourcesSpec extends CacheHygiene {
     assert(m === Map("OTU_1" -> "C0", "OTU_3" -> "C1", "OTU_5" -> "C2"))
   }
 
-  test("keepFirstByAgg equals window keep-first semantics") {
+  test("keep-first: min-order rows per key, ties kept, NULLs dropped") {
+    // LinkScore.keepFirst, the one keep-first (the scorer's ui/upui
+    // dedupes, DimBuild's per-gi uniquify)
     val df = Seq(
-      ("c1", 100L, 3, "x"), ("c1", 100L, 1, "y"), ("c1", 100L, 2, "z"),
-      ("c1", 200L, 5, "w"), ("c2", 100L, 7, "v"))
+      (Some("c1"), 100L, Some(3), "x"), (Some("c1"), 100L, Some(1), "y"),
+      (Some("c1"), 100L, Some(2), "z"), (Some("c1"), 200L, Some(5), "w"),
+      (Some("c2"), 100L, Some(7), "v"),
+      (Some("c2"), 100L, Some(7), "t"),  // tie on the minimum: both kept
+      (None, 100L, Some(0), "n"),        // NULL key: dropped
+      (Some("c3"), 300L, None, "o"),     // NULL order, its group's only row: dropped
+      (Some("c2"), 200L, None, "p"), (Some("c2"), 200L, Some(9), "q")) // NULL order sorts first, still dropped
       .toDF("conv_id", "text_hash", "turn_idx", "payload")
-    val kept = Salting.keepFirstByAgg(df, Seq("conv_id", "text_hash"), "turn_idx")
+    val kept = graft.stages.LinkScore.keepFirst(df, col("turn_idx"), col("conv_id"), col("text_hash"))
       .select("conv_id", "text_hash", "turn_idx", "payload")
       .collect().map(_.toSeq).toSet
     assert(kept === Set(
-      Seq("c1", 100L, 1, "y"), Seq("c1", 200L, 5, "w"), Seq("c2", 100L, 7, "v")))
-  }
-
-  test("salted repartition spreads a hot key across partitions") {
-    val hot = (0 until 10000).map(i => ("hotconv", i)).toDF("conv_id", "turn_idx")
-    val parts = Salting.saltedRepartition(hot, col("conv_id"), salt = 8, partitions = 8)
-      .groupBy(spark_partition_id()).count().collect()
-    assert(parts.length > 1, "hot key should span multiple partitions")
+      Seq("c1", 100L, 1, "y"), Seq("c1", 200L, 5, "w"), Seq("c2", 100L, 7, "v"),
+      Seq("c2", 100L, 7, "t"), Seq("c2", 200L, 9, "q")))
   }
 }

@@ -55,8 +55,9 @@ class StreamingSpec extends CacheHygiene {
     val streamed = spark.read.parquet(s"$dir/out")
       .select("conv_id", "turn_idx", "envo").collect().map(_.toSeq).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
-    val batch = StreamingMentions.mentionStream(
-      spark, spark.read.parquet(s"$dir/in").as[Turn], ac)
+    // the batch side is the KG pipeline's own mention stage
+    val batch = graft.stages.MentionDetect.envoRows(graft.stages.MentionDetect.detect(
+        spark, spark.read.parquet(s"$dir/in"), dict = Some(ac)))
       .select("conv_id", "turn_idx", "envo").collect().map(_.toSeq).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
     assert(streamed === batch)
